@@ -132,17 +132,6 @@ def main(only: set[str] | None = None, fast: bool = False) -> None:
     def q_morton_native_i32(_):
         _noop(li.select(LF.morton_encode_native(i2, "int32").alias("m")))
 
-    # per-bit Project chain (whole-stage codegen); built ONCE at setup —
-    # the chain costs ~2s of driver-side plan construction, so timing
-    # construction per rep would measure the analyzer, not the scan
-    # (see hilbert_encode_native warning; BASELINE.md round 7)
-    if need("hilbert_native_i32x2"):
-        _hn = LF.hilbert_encode_native(li, i2, "int32",
-                                       out_col="h").select("h")
-
-    def q_hilbert_native_i32(_):
-        _noop(_hn)
-
     def q_morton_udf_i32(_):
         _noop(li.select(LF.morton_encode(i2, "int32").alias("m")))
 
@@ -478,7 +467,6 @@ def main(only: set[str] | None = None, fast: bool = False) -> None:
         ("hilbert_encode_i32x2", q_hilbert_i32, n_li),
         ("hilbert_encode_f64x2", q_hilbert_f64, n_li),
         ("morton_native_i32x2", q_morton_native_i32, n_li),
-        ("hilbert_native_i32x2", q_hilbert_native_i32, n_li),
         ("morton_udf_i32x2", q_morton_udf_i32, n_li),
         ("hilbert_decode_rt_i32x2", q_decode_rt_i32, n_li),
         ("text_stats", q_text_stats, n_docs),

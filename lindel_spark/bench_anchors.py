@@ -62,8 +62,7 @@ ANCHORS: dict[str, float] = {
     "embedding_ops_fast": 0.40,
     "knn_ivf": 1.71,
     "knn_ivf_probe": 1.43,
-    # round-7 (native-Hilbert investigation + new-operator tables)
-    "hilbert_native_i32x2": 1.10,
+    # round-7 (new-operator tables)
     "knn_ivf_auto": 0.82,
     "knn_pq_refined": 1.55,
     "knn_ivfpq_refined": 1.43,

@@ -27,6 +27,8 @@ reuses the hilbert keys as locality buckets.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -506,14 +508,12 @@ def simhash_fast(c: Column, bits: int = SIMHASH_BITS) -> Column:
     O(vocabulary) Python in the hot path, which an open 100 TB corpus
     would not forgive. The pipeline default.
     """
-    import pyarrow as pa
-    import pyarrow.compute as pc
     from pyspark.sql import types as T
-    from pyspark.sql.functions import ArrowUDFType, arrow_udf
+    from pyspark.sql.functions import arrow_udf
 
     bit_pos = np.arange(bits, dtype=np.uint64)
 
-    def fn(v: "pa.Array") -> "pa.Array":
+    def fn(v: pa.Array) -> pa.Array:
         v = v.combine_chunks() if isinstance(v, pa.ChunkedArray) else v
         rows = len(v)
         mask = np.asarray(v.is_null())
@@ -537,7 +537,7 @@ def simhash_fast(c: Column, bits: int = SIMHASH_BITS) -> Column:
         )
         return pa.array(sim.view(np.int64), pa.int64(), mask=mask)
 
-    udf = arrow_udf(fn, T.LongType(), ArrowUDFType.SCALAR)
+    udf = arrow_udf(fn, T.LongType())
     return udf(F.transform(tokens(c), _token_hash))
 
 

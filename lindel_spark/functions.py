@@ -6,9 +6,11 @@ reference registration surface: src/lindel_extension.cpp:948-1026.
 Design (SURVEY §3.1): the Python wrapper does DuckDB-style *bind* work
 at DataFrame-construction time — element type + arity resolve the
 output Spark type from the ladder in :mod:`lindel_spark.types` — and
-execution is an Arrow-vectorized pandas UDF over whole batches
+execution is one Arrow-vectorized UDF per direction over whole batches
 (replacing the reference's per-row Rust FFI calls,
-src/lindel_extension.cpp:708,735,771).
+src/lindel_extension.cpp:708,735,771).  Both encode call forms (an
+array column, a list of scalar columns) and the SQL names from
+:func:`register` feed the same encode UDF one ``array<elem>`` column.
 
 Morton (both directions) additionally has a pure-Column "native" path
 for integer inputs with total width <= 64 bits: staged magic-number
@@ -22,6 +24,8 @@ error "Lindel functions cannot handle arrays containing NULL values".
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
 from typing import Sequence
 
 import numpy as np
@@ -30,7 +34,7 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import ArrowUDFType, arrow_udf
+from pyspark.sql.functions import arrow_udf
 
 from lindel_spark import curve
 from lindel_spark.types import (
@@ -162,6 +166,14 @@ def _decode_kernel(kind: str):
 
 
 def _make_encode_udf(kind: str, et: ElemType, n: int, out_mode: str):
+    """Encode UDF over one ``array<elem>`` column of length ``n``.
+
+    Fully vectorized: Arrow keeps NULL list elements as true nulls (no
+    pandas NaN ambiguity), so the null-element error (reference
+    src/lindel_extension.cpp:690-694) is one ``null_count`` check and a
+    genuine float NaN remains a legal bit-cast input.  A NULL array maps
+    to a NULL key.
+    """
     total_bits = encode_output_bits(et.bits, n)
     ret_type = encode_output_spark_type(total_bits, out_mode)
     width_bytes = total_bits // 8
@@ -169,24 +181,32 @@ def _make_encode_udf(kind: str, et: ElemType, n: int, out_mode: str):
     np_dtype = et.np_dtype
     elem_bits = et.bits
 
-    def fn(*cols: pa.Array) -> pa.Array:
-        null_a, bad_a = _chunked(cols[0]), _chunked(cols[1])
-        elems = [_chunked(c) for c in cols[2:]]
-        mask = _np_bool(null_a)
-        bad = _np_bool(bad_a)
-        if (bad & ~mask).any():
-            raise ValueError(_NULL_ELEM_MSG + f" (or array length != {n})")
-        X = np.column_stack(
-            [
-                e.to_numpy(zero_copy_only=False).astype(np_dtype, copy=False)
-                for e in elems
-            ]
+    def fn(v: pa.Array) -> pa.Array:
+        v = _chunked(v)
+        rows = len(v)
+        mask = _np_bool(v.is_null())
+        lengths = pc.list_value_length(v).fill_null(n).to_numpy(
+            zero_copy_only=False
         )
+        if (lengths != n).any():
+            bad = int(lengths[lengths != n][0])
+            raise ValueError(
+                f"LINDEL: expected array of length {n}, got ({bad},)"
+            )
+        flat = v.flatten()  # non-null lists' values, in row order
+        if flat.null_count:
+            raise ValueError(_NULL_ELEM_MSG)
+        vals = flat.to_numpy(zero_copy_only=False).astype(np_dtype, copy=False)
+        if mask.any():
+            X = np.zeros((rows, n), dtype=np_dtype)
+            X[~mask] = vals.reshape(-1, n)
+        else:
+            X = vals.reshape(rows, n)
         U = curve.bitcast_to_unsigned(np.ascontiguousarray(X), elem_bits)
         hi, lo = kernel(U, elem_bits)
         return _encode_output(ret_type, hi, lo, mask, width_bytes)
 
-    return arrow_udf(fn, ret_type, ArrowUDFType.SCALAR)
+    return arrow_udf(fn, ret_type)
 
 
 def _infer_elem(df, arr) -> str:
@@ -237,41 +257,25 @@ def _resolve_elem(arr, elem, df):
 
 
 def _encode(kind: str, arr, elem, n, output):
+    """Both call forms become one ``array<elem>`` column for the one
+    encode UDF.  The Spark cast to ``elem`` runs first, so an
+    out-of-range input raises ``CAST_OVERFLOW`` (ANSI) instead of
+    wrapping in NumPy."""
     et = elem_type(elem)
     if isinstance(arr, (list, tuple)):
         cols = [c if isinstance(c, Column) else F.col(c) for c in arr]
-        n = len(cols)
-        encode_output_bits(et.bits, n)  # validate arity early
-        udf = _make_encode_udf(kind, et, n, output)
-        is_null = F.lit(False)
-        for c in cols:
-            is_null = is_null | c.isNull()
-        bad = F.lit(False)
-        elems = [F.coalesce(c.cast(et.spark_type), F.lit(0).cast(et.spark_type))
-                 for c in cols]
-        return udf(is_null, bad, *elems)
-    col = arr if isinstance(arr, Column) else F.col(arr)
+        udf = _make_encode_udf(kind, et, len(cols), output)
+        any_null = reduce(operator.or_, [c.isNull() for c in cols])
+        return udf(F.when(any_null, F.lit(None)).otherwise(
+            F.array(*[c.cast(et.spark_type) for c in cols])))
     if n is None:
         raise ValueError(
             "LINDEL: pass n= (array length) when encoding an array column; "
             "Spark arrays carry no bind-time length (SURVEY §7.4)"
         )
-    encode_output_bits(et.bits, n)
     udf = _make_encode_udf(kind, et, n, output)
-    is_null = col.isNull()
-    bad = F.when(
-        col.isNull(), F.lit(False)
-    ).otherwise(
-        (F.size(col) != F.lit(n)) | F.exists(col, lambda x: x.isNull())
-    )
-    elems = [
-        F.coalesce(
-            F.element_at(col, i + 1).cast(et.spark_type),
-            F.lit(0).cast(et.spark_type),
-        )
-        for i in range(n)
-    ]
-    return udf(is_null, bad, *elems)
+    col = arr if isinstance(arr, Column) else F.col(arr)
+    return udf(col.cast(T.ArrayType(et.spark_type)))
 
 
 def hilbert_encode(arr, elem: str | None = "int32", n: int | None = None,
@@ -379,7 +383,7 @@ def _make_decode_udf(kind: str, plan: DecodePlan, binary_input: bool):
             )
         return _list_array(pa.array(Xc.ravel()), n, mask)
 
-    return arrow_udf(fn, ret_type, ArrowUDFType.SCALAR)
+    return arrow_udf(fn, ret_type)
 
 
 def _decode(kind: str, col, nparts: int, want_float: bool, want_unsigned: bool,
@@ -572,236 +576,10 @@ def _deinterleave_native(col: Column, n: int, bits: int) -> list:
     return coords
 
 
-def _resign_native(x: Column, bits: int) -> Column:
-    """Two's-complement re-sign of an unsigned-in-long value at ``bits``."""
-    if bits == 64:
-        return x
-    half = 1 << (bits - 1)
-    return F.when(x >= F.lit(half), x - F.lit(1 << bits)).otherwise(x)
-
-
-# ---------------------------------------------------------------------------
-# Hilbert native-Column fast path (whole-stage codegen, no Python)
-# ---------------------------------------------------------------------------
-
-def _q_lit(q: int) -> Column:
-    """The bit mask 1<<k as a long literal (sign-bit safe at k=63)."""
-    return F.lit(q if q < (1 << 63) else -(1 << 63)).cast(T.LongType())
-
-
-def hilbert_encode_native(df, cols: Sequence, elem: str | None = "int32",
-                          out_col: str = "__lindel_hilbert__"):
-    """Pure-Column Hilbert encode for integer inputs, total width <= 64.
-
-    Returns ``df`` with ``out_col`` added — a DataFrame transform, not
-    a single Column, because Skilling's axes→transpose pass
-    (curve.py:168-207; J. Skilling, AIP Conf. Proc. 707, 2004) is a
-    sequential per-bit state machine: each bit level rewrites the
-    coordinates in terms of the previous level.  Expressed as one
-    Column expression the state would be inlined multiplicatively
-    (~6^bits nodes); expressed as one Project per (level, dimension)
-    with named intermediate columns, each stage's outputs are
-    referenced more than once so Catalyst's CollapseProject keeps the
-    stages separate and whole-stage codegen fuses them into
-    straight-line JVM bytecode with local variables — the same code a
-    hand-written Java kernel would produce, with no JVM↔Python hop.
-
-    .. warning::
-       Experimental — measured and kept for the record, but
-       :func:`hilbert_encode` (Arrow UDF) remains the recommended
-       path (BASELINE.md round 7): on a cached in-memory frame the
-       chain wins ~1.25x (0.70s vs 0.87s, 6M rows), but on a real
-       parquet scan the two are equal (~0.8s vs ~0.7s at sf0.1) while
-       the chain costs ~2s of driver-side plan construction, and a
-       ``filter`` (or join condition) referencing ``out_col`` placed
-       directly above the chain makes Catalyst's predicate-pushdown
-       substitute the whole state machine into the predicate level by
-       level — exponential in ``bits`` (measured: OOM at 31 levels).
-       Consume the result straight into a sink or aggregate only.
-
-    Bit-identical to :func:`hilbert_encode` (asserted over random
-    inputs in tests/test_native_hilbert.py and against an independent
-    DuckDB recursive-CTE oracle in the ``hilbert_native_vals_i32``
-    registry query).  Reference semantics:
-    src/lindel_extension.cpp:495-660 (hilbert_encode bind + kernel
-    dispatch into duckdb_lindel_rust/src/lib.rs hilbert_index).
-    """
-    et = elem_type(_resolve_elem(list(cols), elem, df))
-    if et.is_float:
-        raise ValueError(
-            "LINDEL: native hilbert path is integer-only (floats need a "
-            "bit-cast Spark lacks); use hilbert_encode()"
-        )
-    cols = [c if isinstance(c, Column) else F.col(c) for c in cols]
-    n = len(cols)
-    total = encode_output_bits(et.bits, n)
-    if total > 64:
-        raise ValueError(
-            f"LINDEL: native hilbert limited to 64-bit outputs "
-            f"(got {et.bits}x{n}={et.bits * n}); use hilbert_encode(output='binary')"
-        )
-    bits = et.bits
-    tmp = [f"__lindel_h{i}__" for i in range(n)]
-    out = df.withColumns(
-        {t: _to_unsigned_long(c, bits) for t, c in zip(tmp, cols)}
-    )
-    X = [F.col(t) for t in tmp]
-
-    # Skilling inverse-undo pass, top bit down to 2 (curve.py:183-198).
-    for k in range(bits - 1, 0, -1):
-        Q = 1 << k
-        P = F.lit(Q - 1).cast(T.LongType())
-        QL = _q_lit(Q)
-        cond0 = X[0].bitwiseAND(QL) != 0
-        out = out.withColumn(
-            tmp[0], F.when(cond0, X[0].bitwiseXOR(P)).otherwise(X[0])
-        )
-        for i in range(1, n):
-            cond = X[i].bitwiseAND(QL) != 0
-            t = F.when(cond, F.lit(0).cast(T.LongType())).otherwise(
-                X[0].bitwiseXOR(X[i]).bitwiseAND(P)
-            )
-            out = out.withColumns({
-                tmp[0]: F.when(cond, X[0].bitwiseXOR(P)).otherwise(
-                    X[0].bitwiseXOR(t)
-                ),
-                tmp[i]: X[i].bitwiseXOR(t),
-            })
-    # Gray encode across dimensions (sequential, uses updated neighbor;
-    # curve.py:199-201).
-    for i in range(1, n):
-        out = out.withColumn(tmp[i], X[i].bitwiseXOR(X[i - 1]))
-    # curve.py:202-206 in closed form: bit j of t = parity of the last
-    # coordinate's bits strictly above j = (suffix-XOR cascade) >> 1.
-    y = X[n - 1]
-    s = 1
-    while s < bits:
-        y = y.bitwiseXOR(F.shiftrightunsigned(y, s))
-        s <<= 1
-    tcol = "__lindel_ht__"
-    out = out.withColumn(tcol, F.shiftrightunsigned(y, 1))
-    tref = F.col(tcol)
-    out = out.withColumns(
-        {tmp[i]: X[i].bitwiseXOR(tref) for i in range(n)}
-    )
-    out = out.withColumn(out_col, _interleave_native(X, bits, n))
-    return out.drop(tcol, *tmp)
-
-
-def hilbert_decode_native(df, col, nparts: int, elem: str = "int32",
-                          signed: bool = True,
-                          out_col: str = "__lindel_axes__"):
-    """Pure-Column Hilbert decode (inverse of hilbert_encode_native).
-
-    Returns ``df`` with ``out_col`` added as ``array<long>`` of the
-    ``nparts`` coordinates; ``signed=True`` re-signs two's-complement
-    at the element width (want_unsigned=false decode semantics,
-    reference DECODE_TYPE_MAPPINGS src/lindel_extension.cpp:64-97).
-    Same DataFrame-transform shape as :func:`hilbert_encode_native`
-    (the transpose→axes pass, curve.py:210-237, is the mirrored state
-    machine).
-    """
-    et = elem_type(elem)
-    if et.is_float:
-        raise ValueError("LINDEL: native hilbert decode is integer-only")
-    if encode_output_bits(et.bits, nparts) > 64:
-        raise ValueError(
-            f"LINDEL: native hilbert limited to 64-bit inputs "
-            f"(got {et.bits}x{nparts}={et.bits * nparts}); use hilbert_decode()"
-        )
-    col = col if isinstance(col, Column) else F.col(col)
-    n = nparts
-    bits = et.bits
-    tmp = [f"__lindel_h{i}__" for i in range(n)]
-    coords = _deinterleave_native(col, n, bits)
-    out = df.withColumns(dict(zip(tmp, coords)))
-    X = [F.col(t) for t in tmp]
-
-    # Gray decode (curve.py:217-221): t from the ORIGINAL last
-    # coordinate; the descending update uses the not-yet-updated
-    # neighbor, which a descending withColumn chain preserves.
-    tcol = "__lindel_ht__"
-    out = out.withColumn(tcol, F.shiftrightunsigned(X[n - 1], 1))
-    for i in range(n - 1, 0, -1):
-        out = out.withColumn(tmp[i], X[i].bitwiseXOR(X[i - 1]))
-    out = out.withColumn(tmp[0], X[0].bitwiseXOR(F.col(tcol)))
-
-    # Undo-excess pass, bit 2 up to the top (curve.py:223-236): inner
-    # loop runs dimensions high→low with dim 0 last.
-    for k in range(1, bits):
-        Q = 1 << k
-        P = F.lit(Q - 1).cast(T.LongType())
-        QL = _q_lit(Q)
-        for i in range(n - 1, 0, -1):
-            cond = X[i].bitwiseAND(QL) != 0
-            t = F.when(cond, F.lit(0).cast(T.LongType())).otherwise(
-                X[0].bitwiseXOR(X[i]).bitwiseAND(P)
-            )
-            out = out.withColumns({
-                tmp[0]: F.when(cond, X[0].bitwiseXOR(P)).otherwise(
-                    X[0].bitwiseXOR(t)
-                ),
-                tmp[i]: X[i].bitwiseXOR(t),
-            })
-        cond0 = X[0].bitwiseAND(QL) != 0
-        out = out.withColumn(
-            tmp[0], F.when(cond0, X[0].bitwiseXOR(P)).otherwise(X[0])
-        )
-    if signed:
-        axes = [_resign_native(x, bits) for x in X]
-    else:
-        axes = list(X)
-    out = out.withColumn(out_col, F.array(*axes))
-    return out.drop(tcol, *tmp)
-
-
 # ---------------------------------------------------------------------------
 # SQL registration (reference: catalog registration with metadata,
 # src/lindel_extension.cpp:948-1026; no telemetry — deliberately omitted)
 # ---------------------------------------------------------------------------
-
-def _make_encode_array_udf(kind: str, et: ElemType, n: int, out_mode: str):
-    """Array-column-input variant for SQL registration (one arg).
-
-    Fully vectorized: Arrow keeps NULL list elements as true nulls (no
-    pandas NaN ambiguity), so the null-element error (reference
-    src/lindel_extension.cpp:690-694) is one ``null_count`` check and a
-    genuine float NaN remains a legal bit-cast input.
-    """
-    total_bits = encode_output_bits(et.bits, n)
-    ret_type = encode_output_spark_type(total_bits, out_mode)
-    width_bytes = total_bits // 8
-    kernel = _encode_kernel(kind)
-    np_dtype = et.np_dtype
-    elem_bits = et.bits
-
-    def fn(v: pa.Array) -> pa.Array:
-        v = _chunked(v)
-        rows = len(v)
-        mask = _np_bool(v.is_null())
-        lengths = pc.list_value_length(v).fill_null(n).to_numpy(
-            zero_copy_only=False
-        )
-        if (lengths != n).any():
-            bad = int(lengths[lengths != n][0])
-            raise ValueError(
-                f"LINDEL: expected array of length {n}, got ({bad},)"
-            )
-        flat = v.flatten()  # non-null lists' values, in row order
-        if flat.null_count:
-            raise ValueError(_NULL_ELEM_MSG)
-        vals = flat.to_numpy(zero_copy_only=False).astype(np_dtype, copy=False)
-        if mask.any():
-            X = np.zeros((rows, n), dtype=np_dtype)
-            X[~mask] = vals.reshape(-1, n)
-        else:
-            X = vals.reshape(rows, n)
-        U = curve.bitcast_to_unsigned(np.ascontiguousarray(X), elem_bits)
-        hi, lo = kernel(U, elem_bits)
-        return _encode_output(ret_type, hi, lo, mask, width_bytes)
-
-    return arrow_udf(fn, ret_type, ArrowUDFType.SCALAR)
-
 
 def register(spark: SparkSession, elems=("int8", "int16", "int32", "int64",
                                          "float32", "float64")) -> list[str]:
@@ -825,12 +603,10 @@ def register(spark: SparkSession, elems=("int8", "int16", "int32", "int64",
             for n in range(1, max_n + 1):
                 name = f"{kind}_encode_{et.name}_{n}"
                 impl = f"__lindel_impl_{name}"
-                spark.udf.register(impl, _make_encode_array_udf(kind, et, n, "auto"))
+                spark.udf.register(impl, _make_encode_udf(kind, et, n, "auto"))
                 # SQL-UDF wrapper: NULL array -> NULL, NULL element ->
                 # error (reference src/lindel_extension.cpp:684-694),
-                # checked natively *before* Arrow->pandas conversion —
-                # float NULL elements would otherwise arrive as NaN and
-                # be indistinguishable from legal bit-cast NaN inputs.
+                # raised in SQL before the batch reaches Python.
                 total = encode_output_bits(et.bits, n)
                 ret = encode_output_spark_type(total, "auto").simpleString()
                 arr_t = f"array<{et.spark_type.simpleString()}>"

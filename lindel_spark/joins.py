@@ -191,14 +191,6 @@ def asof_join(
     )
 
 
-def spatial_cell_key(cols: Sequence[Column], cell: float) -> Column:
-    """Single-long cell id for a 2-D point: Morton key of the floored
-    cell coordinates. The curve key keeps neighboring cells numerically
-    close, so bucketed data can also be range-partitioned/sorted by the
-    same key for storage locality (the package's zorder machinery)."""
-    return morton_encode_native(_cell_coords(cols, cell), "int32")
-
-
 def _cell_coords(cols: Sequence[Column], cell: float) -> list[Column]:
     """Non-negative int cell indices, offset by 2^20.
 

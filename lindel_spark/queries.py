@@ -690,14 +690,15 @@ SELECT x, y, ((xe << 1) | ye)::BIGINT AS h FROM s5
 """
 
 
-@query("hilbert_native_vals_i32", _HILBERT2_DUCK)
-def q_hilbert_native_vals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native-Column Hilbert (per-bit Project chain, whole-stage
-    codegen) vs DuckDB's own recursive-CTE Skilling transform —
-    independent implementations of the same published algorithm
-    (J. Skilling, AIP Conf. Proc. 707, 2004), compared value-by-value
-    over every lineitem row.  31-bit coordinates keep all math in
-    positive signed-64 space in both engines."""
+@query("hilbert_vals_i32", _HILBERT2_DUCK)
+def q_hilbert_vals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The shipped :func:`hilbert_encode` (list-of-columns form, NumPy
+    Skilling kernel behind the Arrow UDF) vs DuckDB's own recursive-CTE
+    Skilling transform — independent implementations of the same
+    published algorithm (J. Skilling, AIP Conf. Proc. 707, 2004),
+    compared value-by-value over every lineitem row.  31-bit
+    coordinates keep all math in positive signed-64 space in both
+    engines."""
     li = _lineitem(spark, sf_dir)
     src = li.select(
         ((F.col("l_orderkey").cast("long") * F.lit(2654435761))
@@ -705,7 +706,8 @@ def q_hilbert_native_vals(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("l_partkey").cast("long") * F.lit(69621))
          % F.lit(2147483648)).alias("y"),
     )
-    return LF.hilbert_encode_native(src, ["x", "y"], "int32", out_col="h")
+    return src.select("x", "y", LF.hilbert_encode(
+        [F.col("x"), F.col("y")], "int32").alias("h"))
 
 
 # ---------------------------------------------------------------------------

@@ -35,7 +35,7 @@ def zorder_key(cols: Sequence, elem: str | None = "int32",
 
     Picks the cheapest bit-identical implementation: the pure-Column
     (whole-stage codegen) Morton path when legal, else the
-    Arrow-vectorized pandas UDF.  For 128-bit keys the key is
+    Arrow-vectorized encode UDF.  For 128-bit keys the key is
     big-endian binary, whose lexicographic order equals unsigned
     numeric order, so range partitioning still clusters correctly.
     ``elem=None`` + ``df=`` infers the element type from the schema.
@@ -72,12 +72,6 @@ def _prepare_zorder_frame(
     """
     from pyspark import StorageLevel
 
-    # NOTE round-7 finding (BASELINE.md): a pure-Column Hilbert state
-    # machine (hilbert_encode_native) was measured here and REVERTED —
-    # steady-state it is no faster than the Arrow UDF on parquet-scan
-    # input (0.8s vs 0.7s at sf0.1) and the persist+range-shuffle
-    # combination replans the 62-Project chain pathologically
-    # (14.7s vs 2.7s for this write). The Arrow UDF stays the default.
     key = zorder_key(cols, elem, curve, df=df)
     keyed = df.withColumn(_KEY, key)
     if persist_key:
@@ -960,20 +954,6 @@ def zorder_store_delete(spark, path: str, key_col: str,
     kdf.write.mode("append").parquet(
         _fs.join(path, "deletes", key_col))
     return n
-
-
-def zorder_store_maintain_deletes(spark, path: str, cols: Sequence,
-                                  **zorder_kwargs) -> dict:
-    """Force-fold tombstones: a maintenance rewrite that runs even
-    below the tail-ratio threshold whenever tombstones exist, so the
-    physical purge (the part compliance actually requires) can be
-    scheduled independently of compaction economics. Delegates to
-    :func:`zorder_store_maintain` with ``tail_ratio=0`` when any
-    tombstone column is present; no-op otherwise."""
-    if not _zstore_delete_cols(spark, path):
-        return {"rewritten": False, "reason": "no tombstones"}
-    return zorder_store_maintain(spark, path, cols, tail_ratio=0.0,
-                                 **zorder_kwargs)
 
 
 def zorder_store_vacuum(spark, path: str,

@@ -1,5 +1,5 @@
 """Spark-level tests of the four lindel functions (goldens, types,
-NULL semantics, native fast path). Reference corpus:
+NULL semantics, call forms, native Morton fast path). Reference corpus:
 test/sql/lindel.test:15-111, docs/README.md:117-287."""
 
 import pytest
@@ -183,26 +183,44 @@ def test_null_array_gives_null(spark):
 
 
 def test_null_element_raises(spark):
-    df = spark.createDataFrame([([1, None],)], "arr array<int>")
-    with pytest.raises(Exception, match="NULL values|length"):
-        df.select(LF.hilbert_encode(F.col("arr"), "int8", n=2).alias("h")).collect()
+    # a NULL float element must not pass as a (legal, bit-cast) NaN
+    for row, arr_t, elem in (([1, None], "arr array<int>", "int8"),
+                             ([1.0, None], "arr array<double>", "float32")):
+        df = spark.createDataFrame([(row,)], arr_t)
+        with pytest.raises(Exception, match="NULL values"):
+            df.select(LF.hilbert_encode(F.col("arr"), elem, n=2).alias("h")).collect()
 
 
 def test_null_scalar_column_gives_null(spark):
     """List-of-columns form follows SQL null propagation (a NULL input
     column -> NULL key), unlike the array form which raises on NULL
     elements — divergence documented in the hilbert_encode docstring."""
-    df = spark.createDataFrame([(1, 2), (1, None)], "x int, y int")
+    df = spark.createDataFrame(
+        [(1, 2), (1, None), (None, 2), (None, None), (0, 0)], "x int, y int")
     r = df.select(
-        LF.hilbert_encode([F.col("x"), F.col("y")], "int8").alias("h")
+        LF.hilbert_encode([F.col("x"), F.col("y")], "int8").alias("h"),
+        LF.morton_encode(["x", "y"], "int8").alias("m"),
     ).collect()
-    assert [x.h for x in r] == [7, None]
+    assert [x.h for x in r] == [7, None, None, None, 0]
+    assert [x.m for x in r] == [6, None, None, None, 0]
 
 
 def test_wrong_length_raises(spark):
-    df = spark.createDataFrame([([1, 2, 3],)], "arr array<int>")
-    with pytest.raises(Exception, match="NULL values|length"):
-        df.select(LF.hilbert_encode(F.col("arr"), "int8", n=2).alias("h")).collect()
+    for arr in ([1, 2, 3], [1]):
+        df = spark.createDataFrame([(arr,)], "arr array<int>")
+        with pytest.raises(Exception, match="length"):
+            df.select(LF.hilbert_encode(F.col("arr"), "int8", n=2).alias("h")).collect()
+
+
+def test_out_of_range_element_raises_in_both_forms(spark):
+    """The Spark cast to ``elem`` runs before the kernel: 300 does not
+    fit int8, so both call forms fail with CAST_OVERFLOW (ANSI) rather
+    than wrapping to 44 in a NumPy ``astype``."""
+    df = spark.createDataFrame([(300, 1, [300, 1])], "x int, y int, arr array<int>")
+    for key in (LF.hilbert_encode(["x", "y"], "int8"),
+                LF.hilbert_encode(F.col("arr"), "int8", n=2)):
+        with pytest.raises(Exception, match="CAST_OVERFLOW"):
+            df.select(key.alias("h")).collect()
 
 
 def test_signed_bigint_roundtrip(spark):
@@ -238,6 +256,25 @@ def test_sql_registration(spark):
     ).collect()[0]
     assert r.h == 22
     assert list(r.d) == [1, 2, 3]
+
+
+def test_udf_construction_emits_no_warning(spark):
+    """Every Arrow UDF is built from type hints: Spark warns at each
+    construction that names an explicit arrow UDF type instead."""
+    import warnings
+
+    from lindel_spark.dedup import simhash_fast
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        for kind in ("hilbert", "morton"):
+            enc = getattr(LF, f"{kind}_encode")
+            dec = getattr(LF, f"{kind}_decode")
+            enc(["x", "y"], "int32")
+            enc(F.col("arr"), "float64", n=2)
+            dec(F.col("v"), 2, input_width=64)
+            dec(F.col("b"), 2, input_width=128)
+        simhash_fast(F.col("text"))
 
 
 def test_elem_inference_from_schema(spark):
