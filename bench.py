@@ -47,6 +47,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# callers parse the last stdout line from a fixed-size tail of the
+# output; warn well before the result line could outgrow it
+SLIM_LINE_WARN_BYTES = 6000
 
 
 def _sf() -> float:
@@ -1264,22 +1267,30 @@ def main(only: set[str] | None = None, fast: bool = False) -> None:
     # clipped) as entries accumulated. Round 16: the line carries
     # ONLY the graded fields (metric/value/queries/sf) with per-query
     # seconds rounded to 3 decimals (~2.5 kB at 91 entries, with
-    # headroom for 120+); the adjudication detail (canary,
-    # over_bar_reruns, reps, rows, manifest, ivf_store, errors) lives
-    # in the committed artifact above.
+    # headroom for 120+) plus two adjudication scalars: the canary's
+    # post/pre ratio (host drift) and the over-bar rerun count; the
+    # detail (canary, over_bar_reruns, reps, rows, manifest,
+    # ivf_store, errors) lives in the committed artifact above.
     slim = {
         "metric": out["metric"], "value": out["value"],
         "unit": out["unit"],
         "queries": {n: round(v, 3) for n, v in out["queries"].items()},
         "sf": out["sf"],
+        "canary_ratio": canary.get("post_pre_ratio"),
+        "n_over_bar": len(over_bar_reruns),
     }
     if errors:
         slim["n_errors"] = len(errors)
+    line = json.dumps(slim)
+    if len(line) > SLIM_LINE_WARN_BYTES:
+        print(f"BENCH WARNING: stdout result line is {len(line)} bytes "
+              f"(> {SLIM_LINE_WARN_BYTES}); a tail-window parse may "
+              f"clip it", file=sys.stderr)
     sys.stdout.flush()
     # leading newline: if the capture merges stderr, a dangling
     # carriage-return progress fragment would otherwise share the
     # JSON's line and break a last-line parse
-    print("\n" + json.dumps(slim), flush=True)
+    print("\n" + line, flush=True)
 
 
 if __name__ == "__main__":

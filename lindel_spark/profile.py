@@ -111,28 +111,46 @@ def _strip_file_scheme(uri: str) -> str:
     return uri
 
 
-def _open_footer(path: str):
-    """(ParquetFile, file_bytes) for a local path OR a filesystem URI.
-
-    Executor-side helper for the footer readers: plain paths open
-    directly; ``hdfs://`` / ``s3a://`` (→ ``s3://``) resolve a pyarrow
-    filesystem from the URI scheme, so a remote store's metadata jobs
-    work from executors instead of assuming a POSIX mount (round-8
-    ADVICE: the raw-path open broke exactly the object-store case
+def _arrow_path(path: str):
+    """(pyarrow filesystem or None, path in it) for a local path OR a
+    filesystem URI: plain and ``file:`` paths open directly;
+    ``hdfs://`` / ``s3a://`` (→ ``s3://``) resolve a pyarrow
+    filesystem from the URI scheme, so metadata reads work on a remote
+    store instead of assuming a POSIX mount (round-8 ADVICE: the
+    raw-path open broke exactly the object-store case
     :mod:`lindel_spark.fs` exists for)."""
-    import os as _os
-
-    import pyarrow.parquet as pq
-
+    path = _strip_file_scheme(path)
     if "://" not in path:
-        return pq.ParquetFile(path), _os.path.getsize(path)
+        return None, path
     from pyarrow import fs as pafs
 
     # pyarrow speaks s3://; Hadoop's connector scheme is s3a://
-    uri = path.replace("s3a://", "s3://", 1)
-    filesystem, rel = pafs.FileSystem.from_uri(uri)
+    return pafs.FileSystem.from_uri(path.replace("s3a://", "s3://", 1))
+
+
+def _open_footer(path: str):
+    """(ParquetFile, file_bytes) for a local path OR a filesystem URI
+    (executor-side helper for the footer readers)."""
+    import pyarrow.parquet as pq
+
+    filesystem, rel = _arrow_path(path)
+    if filesystem is None:
+        return pq.ParquetFile(rel), os.path.getsize(rel)
     info = filesystem.get_file_info(rel)
     return pq.ParquetFile(filesystem.open_input_file(rel)), info.size
+
+
+def _read_parquet_parts(paths) -> "pa.Table":
+    """Small Parquet parts (a store's own manifests) read on the
+    driver into one Arrow table — metadata-sized, so no Spark job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tables = []
+    for p in paths:
+        filesystem, rel = _arrow_path(p)
+        tables.append(pq.read_table(rel, filesystem=filesystem))
+    return pa.concat_tables(tables)
 
 
 def parquet_layout_report(spark, path: str) -> DataFrame:
@@ -434,54 +452,64 @@ def file_minmax_manifest(spark, path: str, cols,
     return fdf.mapInPandas(read_stats, out_schema)
 
 
-def _minmax_survivor_pred(man_columns, ranges: dict, prunable=None):
-    """The survive-the-range-predicates Column over a stats-manifest
-    row (shared by :func:`manifest_survivors` and the single-pass
-    aggregates that need the predicate without a separate filter)."""
-    cols = set(man_columns)
-    pred = F.lit(True)
+def minmax_survivor_stats(man, ranges: dict,
+                          prunable=None) -> tuple[int, list]:
+    """(files_total, sorted surviving file paths) of a stats manifest:
+    files whose [min, max] can intersect every predicate range. A NULL
+    stat — or a column outside ``prunable`` / missing from the
+    manifest — never prunes.
+
+    ``man`` is a pyarrow Table or a list of Row/dict already on the
+    driver (a store's persisted manifest, as table formats keep their
+    transaction log: no Spark job), or a manifest DataFrame, collected
+    ONCE — so an un-persisted footer-sweep plan never executes twice
+    (round-9 ADVICE). The pruning itself is NumPy on the driver: a
+    manifest is one row per file, and a million-row manifest prunes
+    in well under a second."""
+    import numpy as np
+    import pyarrow as pa
+
+    if isinstance(man, DataFrame):
+        man = man.toArrow()
+    elif not isinstance(man, pa.Table):
+        man = pa.Table.from_pylist(
+            [r if isinstance(r, dict) else r.asDict() for r in man])
+    cols = set(man.column_names)
+    keep = np.ones(man.num_rows, bool)
     for c, (lo, hi) in ranges.items():
         if prunable is not None and c not in prunable:
             continue
         if f"min_{c}" not in cols or f"max_{c}" not in cols:
             continue
-        mn, mx = F.col(f"min_{c}"), F.col(f"max_{c}")
-        no_stats = mn.isNull() | mx.isNull()
-        keep = F.lit(True)
+        # a NULL stat arrives as NaN and keeps its file
+        mn, mx = (np.asarray(man.column(f"{b}_{c}").to_pandas(), float)
+                  for b in ("min", "max"))
+        ok = np.ones(man.num_rows, bool)
         if lo is not None:
-            keep = keep & (mx >= F.lit(float(lo)))
+            ok &= mx >= float(lo)
         if hi is not None:
-            keep = keep & (mn <= F.lit(float(hi)))
-        pred = pred & (no_stats | keep)
-    return pred
+            ok &= mn <= float(hi)
+        keep &= np.isnan(mn) | np.isnan(mx) | ok
+    if "file" not in cols:
+        return man.num_rows, []
+    return man.num_rows, sorted(set(
+        man.column("file").filter(pa.array(keep)).to_pylist()))
 
 
-def manifest_survivors(man: DataFrame, ranges: dict,
-                       prunable=None) -> DataFrame:
-    """Filter a stats-manifest DataFrame down to files whose
-    [min, max] can intersect every predicate range. Conservative: a
-    NULL stat — or a column outside ``prunable`` / missing from the
-    manifest — never prunes. Runs DISTRIBUTED: on a million-file
-    table the filter is pushed into the manifest's own parquet scan
-    and only survivors flow out."""
-    return man.filter(_minmax_survivor_pred(man.columns, ranges,
-                                            prunable))
-
-
-def minmax_survivor_stats(man: DataFrame, ranges: dict,
-                          prunable=None) -> tuple[int, list]:
-    """(files_total, sorted surviving file paths) in ONE pass over the
-    manifest — one aggregate carrying a count plus the survivor set,
-    so callers holding an UN-persisted manifest (a live footer-sweep
-    plan) never execute it twice (round-9 ADVICE: the count() +
-    survivors collect pair ran the distributed footer job per action)."""
-    pred = _minmax_survivor_pred(man.columns, ranges, prunable)
-    row = man.agg(
-        F.count(F.lit(1)).alias("__total"),
-        F.sort_array(
-            F.collect_set(F.when(pred, F.col("file")))).alias("__keep"),
-    ).first()
-    return int(row["__total"]), list(row["__keep"])
+def range_residual(ranges: dict) -> Column:
+    """The exact row filter of ``ranges`` (column -> inclusive (lo, hi),
+    None open). A ``lo == hi`` range is an equality, the one predicate
+    a Parquet bloom filter can answer."""
+    residual = F.lit(True)
+    for c, (lo, hi) in ranges.items():
+        if lo is not None and lo == hi:
+            residual = residual & (F.col(c) == F.lit(lo))
+            continue
+        if lo is not None:
+            residual = residual & (F.col(c) >= F.lit(lo))
+        if hi is not None:
+            residual = residual & (F.col(c) <= F.lit(hi))
+    return residual
 
 
 def manifest_pruned_read(spark, path: str, manifest,
@@ -496,42 +524,13 @@ def manifest_pruned_read(spark, path: str, manifest,
     being tight (a file with NULL stats is conservatively scanned);
     the residual filter re-applies the predicate row-level either way.
 
-    ``manifest`` is either the DataFrame from
-    :func:`file_minmax_manifest` (pruning runs DISTRIBUTED and only
-    the SURVIVING file paths are collected — survivor-sized, never
-    file-count-sized, round 9; one single-pass aggregate computes the
-    count alongside the survivors so an un-persisted footer-sweep
-    manifest executes ONCE, round 10) or its collected rows (list of
-    Row/dict — the zero-Spark-jobs hot path when the caller already
-    holds the metadata, as table formats do with their transaction
-    log).
+    ``manifest`` is the DataFrame from :func:`file_minmax_manifest`
+    (executed once) or its collected rows (list of Row/dict — the
+    zero-Spark-jobs hot path when the caller already holds the
+    metadata); :func:`minmax_survivor_stats` prunes either form.
     """
-    residual = F.lit(True)
-    for c, (lo, hi) in ranges.items():
-        if lo is not None:
-            residual = residual & (F.col(c) >= F.lit(lo))
-        if hi is not None:
-            residual = residual & (F.col(c) <= F.lit(hi))
-
-    if isinstance(manifest, DataFrame):
-        total, keep = minmax_survivor_stats(manifest, ranges)
-    else:
-        rows = [r if isinstance(r, dict) else r.asDict()
-                for r in manifest]
-
-        def survives(rec: dict) -> bool:
-            for c, (lo, hi) in ranges.items():
-                mn, mx = rec.get(f"min_{c}"), rec.get(f"max_{c}")
-                if mn is None or mx is None:
-                    continue  # no stats: conservatively scan
-                if lo is not None and mx < float(lo):
-                    return False
-                if hi is not None and mn > float(hi):
-                    return False
-            return True
-
-        total = len(rows)
-        keep = [rec["file"] for rec in rows if survives(rec)]
+    residual = range_residual(ranges)
+    total, keep = minmax_survivor_stats(manifest, ranges)
     stats = {"files_total": total, "files_scanned": len(keep)}
     if not keep:
         df = spark.read.parquet(path).filter(residual).limit(0)

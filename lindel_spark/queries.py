@@ -8137,17 +8137,15 @@ def q_zorder_store_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_zorder_store_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The store's POINT-LOOKUP payoff (round 10,
-    :func:`lindel_spark.write.zorder_store_lookup`): init with
-    ``bloom_cols`` so per-file bloom bitsets persist next to the data
-    (base at init, incremental rows at append), then answer an
-    equality probe scanning only files whose bitset admits the value.
-    The probe runs DISTRIBUTED over the persisted index — survivor
-    paths, never bitsets, reach the driver — and renders the probe
-    value with the same Spark cast the build hashed, so any column
-    type is safe (round-9 verdict item 1 + ADVICE false-negative
-    fix). No false negatives: the oracle recomputes the filter from
-    the raw table; the boolean pins that whole files were skipped."""
+    """The store's POINT-LOOKUP payoff
+    (:func:`lindel_spark.write.zorder_store_lookup`): init with
+    ``bloom_cols`` so base and tail Parquet files carry native bloom
+    filters, then answer an equality probe: the persisted min/max
+    manifest (``l_orderkey`` is also a stat column) prunes files on
+    the driver, and the Parquet reader drops row groups whose bloom
+    filter rules the value out. No false negatives: the oracle
+    recomputes the filter from the raw table; the boolean pins that
+    whole files were skipped."""
     li = _lineitem(spark, sf_dir)
     cols = [F.col("l_orderkey").cast("int"),
             F.col("l_partkey").cast("int")]

@@ -18,6 +18,8 @@ src/lindel_extension.cpp:948-1026); this is the brief's pipeline tier.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -146,6 +148,11 @@ def frequent_triples(
     the anti-monotone support bound, so the plan change never changes
     the answer. All joins are keyed (basket id or pair tuple):
     per-basket fan-out bounds the explode, never |items|³.
+
+    Eager work while the DataFrame is being built: when Catalyst's
+    size estimate of the basket frame exceeds 256 MiB, the persist
+    gate runs ONE ``.first()`` job (the exact pair volume) before this
+    function returns; smaller or unestimated inputs run no job here.
     """
     if min_support_baskets < 1:
         raise ValueError("min_support_baskets must be >= 1")
@@ -171,7 +178,7 @@ def frequent_triples(
     # extra job — the bench path), a larger one pays one bounded
     # aggregate for the EXACT pair volume Σ c·(c−1)/2 (negligible
     # next to the self-join it gates, and it warms b's cache).
-    cap = int(__import__("os").environ.get(
+    cap = int(os.environ.get(
         "SPARK_GRAFT_PAIR_PERSIST_CAP", str(8 << 30)))
     small = 256 << 20
     try:

@@ -574,12 +574,11 @@ def zorder_store_stream_sink(
                                     _zstore_latest)
 
     # init-only knobs: append/maintain re-read the index config from
-    # the store _META (stat_cols since r9; the bloom index since r10 —
-    # a bloom_cols= sink persists bitsets per micro-batch append and
-    # rebuilds them at every amortized re-cluster, for free)
+    # the store _META — a bloom_cols= sink writes Parquet bloom filters
+    # into every micro-batch append and every amortized re-cluster
     init_only = {
         k: zorder_kwargs.pop(k)
-        for k in ("stat_cols", "bloom_cols", "bloom_m_bits", "bloom_k")
+        for k in ("stat_cols", "bloom_cols")
         if k in zorder_kwargs
     }
     init_only.setdefault("stat_cols", None)

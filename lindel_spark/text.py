@@ -1449,8 +1449,10 @@ def trained_language_id(
     char-n-gram NB model, with the STOPWORD argmax
     (:func:`language_id`) as the fallback tier for documents whose
     grams the model has never seen (``n_seen = 0`` across every
-    language: unscored script, empty text). Scores are rounded to
-    ``score_round`` dp BEFORE the argmax so the cross-engine
+    language, e.g. an unscored script). Documents that yield no grams
+    at all (e.g. empty text) have no score rows, so they are ABSENT
+    from the output; they never reach the fallback. Scores are
+    rounded to ``score_round`` dp BEFORE the argmax so the cross-engine
     tie-break (score desc, lang asc) never hinges on the last ulp of
     a distributed float sum (the events_cusum lesson, BASELINE.md
     round 11)."""

@@ -343,30 +343,51 @@ def _zstore_latest(spark, path: str) -> int | None:
     return None
 
 
-def _zstore_meta(spark, path: str) -> dict:
-    """The store's ``_META`` record (committed once at init), with
-    defaults filled for legacy stores: ``stat_cols`` (min/max-indexed
-    columns), ``bloom_cols`` (bloom-indexed columns), and the bloom
-    geometry ``bloom_m_bits`` / ``bloom_k`` the probe must match."""
+def _zstore_current(spark, path: str) -> tuple[int, dict, "StructType"]:
+    """(latest version, ``_META`` record, read schema), read once per
+    store op. ``_META`` is committed once at init; defaults fill a
+    legacy store's ``stat_cols`` (min/max-indexed columns) and
+    ``bloom_cols`` (columns whose Parquet files carry bloom filters),
+    and keys of the retired md5 bloom index are ignored. The schema
+    is the one recorded at init, so no read re-infers it from footers;
+    a legacy store without one infers it from its current base."""
     import json
+
+    from pyspark.sql.types import StructType
 
     from lindel_spark import fs as _fs
 
+    v = _zstore_latest(spark, path)
+    if v is None:
+        raise FileNotFoundError(f"LINDEL: no zorder store at {path}")
     meta = _fs.join(path, "_META")
     rec = {}
     if _fs.exists(spark, meta):
         rec = json.loads(_fs.read_text(spark, meta))
     rec.setdefault("stat_cols", [])
     rec.setdefault("bloom_cols", [])
-    rec.setdefault("bloom_m_bits", 1 << 20)
-    rec.setdefault("bloom_k", 7)
-    return rec
+    return v, rec, (
+        StructType.fromJson(rec["schema"]) if "schema" in rec
+        else spark.read.parquet(_fs.join(path, f"base-v{v}")).schema)
 
 
-def _zstore_stat_cols(spark, path: str) -> list[str]:
-    """The store's manifest-indexed columns, recorded once at init in
-    the append-only ``_META`` commit file ([] for legacy stores)."""
-    return list(_zstore_meta(spark, path)["stat_cols"])
+# Bloom filters are Parquet's own split-block filters, sized from the
+# data: the adaptive writer keeps a ladder of candidate filters, halving
+# from parquet-mr's 1 MiB maximum down to its 32 B minimum (16 rungs),
+# and writes the smallest one that holds the distinct values it saw.
+_BLOOM_CANDIDATES = 16
+
+
+def _bloom_options(bloom_cols) -> dict:
+    """Parquet writer options that write a bloom filter per column
+    chunk for each of ``bloom_cols``."""
+    opts = ({"parquet.bloom.filter.adaptive.enabled": "true"}
+            if bloom_cols else {})
+    for c in bloom_cols:
+        opts[f"parquet.bloom.filter.enabled#{c}"] = "true"
+        opts[f"parquet.bloom.filter.candidates.number#{c}"] = str(
+            _BLOOM_CANDIDATES)
+    return opts
 
 
 def _write_manifest(spark, data_dir: str, manifest_dir: str,
@@ -392,36 +413,9 @@ def _write_manifest(spark, data_dir: str, manifest_dir: str,
     ).parquet(manifest_dir)
 
 
-def _write_bloom_manifest(spark, data_dir: str, bloom_dir: str,
-                          bloom_cols, m_bits: int, k: int,
-                          files=None) -> None:
-    """Per-file bloom bitsets for every indexed column, persisted as
-    one parquet next to the data (schema: col, file, n_positions,
-    bits) — built ONCE per written version / append batch, so point
-    lookups never re-scan data to rebuild the index (round-9 verdict
-    item 1: the bloom manifest now persists exactly like the min/max
-    manifest)."""
-    from functools import reduce
-
-    from lindel_spark.profile import file_bloom_manifest
-
-    parts = [
-        file_bloom_manifest(spark, data_dir, c, m_bits=m_bits, k=k,
-                            files=files)
-        .select(F.lit(c).alias("col"), "file", "n_positions", "bits")
-        for c in bloom_cols
-    ]
-    man = reduce(lambda a, b: a.unionByName(b), parts)
-    man.coalesce(1).write.mode(
-        "append" if files is not None else "overwrite"
-    ).parquet(bloom_dir)
-
-
 def zorder_store_init(df: DataFrame, cols: Sequence, path: str,
                       stat_cols: Sequence[str] | None = None,
                       bloom_cols: Sequence[str] | None = None,
-                      bloom_m_bits: int = 1 << 20,
-                      bloom_k: int = 7,
                       **zorder_kwargs) -> None:
     """Create an incremental z-order store: a curve-clustered ``base``
     plus a ``tail`` for cheap appends, with a PERSISTED per-file
@@ -429,27 +423,27 @@ def zorder_store_init(df: DataFrame, cols: Sequence, path: str,
     Layout::
 
         path/_commits/v{N}    -> append-only commit log (latest = max)
-        path/_META            -> stat_cols/bloom_cols record (once)
+        path/_META            -> stat_cols/bloom_cols/schema (once)
         path/base-v{N}/       -> zorder_write output (clustered)
         path/manifest-v{N}/   -> per-file min/max stats for base-v{N}
         path/manifest-tail/   -> incremental stats, one part per append
-        path/bloom-v{N}/      -> per-file bloom bitsets for base-v{N}
-        path/bloom-tail/      -> incremental bitsets, one per append
         path/tail/            -> plain appended parquet (unclustered)
 
     ``stat_cols`` names the data columns indexed in the manifest (the
     columns range queries will prune on); it defaults to the
     plain-string entries of ``cols``. ``bloom_cols`` names columns
-    additionally indexed with per-file bloom bitsets — the
-    point-lookup complement (min/max prunes RANGE predicates on
-    clustered columns; a bloom filter prunes EQUALITY probes on ANY
-    column, clustered or not): :func:`zorder_store_lookup` turns
-    ``col = value`` into a scan of only the files whose bitset admits
-    the value, reading the persisted index, never data or footers. The manifest is built by ONE
-    distributed footer job per written base version —
-    :func:`zorder_store_select` then reads the stored manifest instead
-    of sweeping footers per query, which is the whole point of a stats
-    index at 10^5-10^6 files.
+    whose Parquet files (base and tail alike) carry native bloom
+    filters (https://github.com/apache/parquet-format/blob/master/BloomFilter.md),
+    sized from the data by the adaptive writer — the point-lookup
+    complement: min/max prunes RANGE predicates on clustered columns,
+    a bloom filter lets the Parquet reader drop row groups for an
+    EQUALITY probe on ANY column, clustered or not
+    (:func:`zorder_store_lookup`). The manifest is built by ONE
+    footer job per written base version — :func:`zorder_store_select`
+    then reads the stored manifest instead of sweeping footers per
+    query, which is the whole point of a stats index at 10^5-10^6
+    files. ``_META`` also records the schema a read of the base
+    returns, so reads never re-infer it.
 
     Versioned directories + an append-only commit log, never in-place
     rewrites — the object-store-safe pattern (no atomic directory
@@ -473,24 +467,27 @@ def zorder_store_init(df: DataFrame, cols: Sequence, path: str,
 
     from lindel_spark import fs as _fs
 
+    retired = sorted({"bloom_m_bits", "bloom_k"} & set(zorder_kwargs))
+    if retired:
+        raise TypeError(
+            f"LINDEL: {retired} no longer exist — bloom_cols are native "
+            f"Parquet bloom filters sized from the data")
     if stat_cols is None:
         stat_cols = [c for c in cols if isinstance(c, str)]
     stat_cols = list(stat_cols)
     bloom_cols = list(bloom_cols or [])
     spark = df.sparkSession
-    zorder_write(df, cols, _fs.join(path, "base-v0"), **zorder_kwargs)
+    base = _fs.join(path, "base-v0")
+    zorder_write(df, cols, base, **_bloom_options(bloom_cols),
+                 **zorder_kwargs)
     if stat_cols:
-        _write_manifest(spark, _fs.join(path, "base-v0"),
-                        _fs.join(path, "manifest-v0"), stat_cols)
-    if bloom_cols:
-        _write_bloom_manifest(spark, _fs.join(path, "base-v0"),
-                              _fs.join(path, "bloom-v0"), bloom_cols,
-                              bloom_m_bits, bloom_k)
+        _write_manifest(spark, base, _fs.join(path, "manifest-v0"),
+                        stat_cols)
+    schema = json.loads(spark.read.parquet(base).schema.json())
     _fs.commit_new(spark, _fs.join(path, "_META"),
                    json.dumps({"stat_cols": stat_cols,
                                "bloom_cols": bloom_cols,
-                               "bloom_m_bits": bloom_m_bits,
-                               "bloom_k": bloom_k}))
+                               "schema": schema}))
     _zstore_commit(spark, path, 0)
 
 
@@ -502,6 +499,11 @@ def zorder_store_append(df: DataFrame, path: str) -> None:
     correct (the store reader unions base + tail); tail stats let
     :func:`zorder_store_select` prune tail files too, and clustering
     degrades only until :func:`zorder_store_maintain` folds the tail.
+    The tail files carry the same bloom filters as the base.
+
+    The frame's column names and types must match the schema recorded
+    at init (checked on the driver, no job); a mismatch raises
+    ``ValueError``.
 
     Multi-writer-safe: data lands first, stats after, so a concurrent
     reader at worst scans a new file conservatively (stats are
@@ -511,24 +513,28 @@ def zorder_store_append(df: DataFrame, path: str) -> None:
 
     spark = df.sparkSession
     tail_dir = _fs.join(path, "tail")
-    meta = _zstore_meta(spark, path)
+    _v, meta, schema = _zstore_current(spark, path)
+    # a read under the store's schema would silently drop or null a
+    # mismatched column; nullability is not part of the check (Parquet
+    # reads every column back nullable)
+    want, got = ({f.name: f.dataType.simpleString() for f in st.fields}
+                 for st in (schema, df.schema))
+    if got != want:
+        raise ValueError(
+            f"LINDEL: appended frame does not match the store's schema: "
+            f"frame has {sorted(got.items() - want.items())}, store has "
+            f"{sorted(want.items() - got.items())}")
     stat_cols = meta["stat_cols"]
-    bloom_cols = meta["bloom_cols"]
-    indexed = bool(stat_cols or bloom_cols)
-    before = set(_fs.list_files(spark, tail_dir)) if indexed else set()
-    df.write.mode("append").parquet(tail_dir)
-    if indexed:
+    before = set(_fs.list_files(spark, tail_dir)) if stat_cols else set()
+    df.write.mode("append").options(
+        **_bloom_options(meta["bloom_cols"])).parquet(tail_dir)
+    if stat_cols:
         new_files = sorted(
             set(_fs.list_files(spark, tail_dir)) - before)
-        if new_files and stat_cols:
+        if new_files:
             _write_manifest(spark, tail_dir,
                             _fs.join(path, "manifest-tail"),
                             stat_cols, files=new_files)
-        if new_files and bloom_cols:
-            _write_bloom_manifest(spark, tail_dir,
-                                  _fs.join(path, "bloom-tail"),
-                                  bloom_cols, meta["bloom_m_bits"],
-                                  meta["bloom_k"], files=new_files)
 
 
 def zorder_store_read(spark, path: str,
@@ -539,19 +545,18 @@ def zorder_store_read(spark, path: str,
     it belongs to the current version's timeline)."""
     from lindel_spark import fs as _fs
 
-    v = _zstore_latest(spark, path)
-    if v is None:
-        raise FileNotFoundError(f"LINDEL: no zorder store at {path}")
+    v, _meta, schema = _zstore_current(spark, path)
+    read = spark.read.schema(schema)
     if version is not None:
         vdir = _fs.join(path, f"base-v{version}")
         if not _fs.is_dir(spark, vdir):
             raise FileNotFoundError(
                 f"LINDEL: version {version} not retained at {path}")
-        return spark.read.parquet(vdir)
-    out = spark.read.parquet(_fs.join(path, f"base-v{v}"))
+        return read.parquet(vdir)
+    out = read.parquet(_fs.join(path, f"base-v{v}"))
     tail_files = _fs.list_files(spark, _fs.join(path, "tail"))
     if tail_files:
-        out = out.unionByName(spark.read.parquet(*tail_files))
+        out = out.unionByName(read.parquet(*tail_files))
     return _zstore_apply_deletes(spark, path, out)
 
 
@@ -575,18 +580,18 @@ def zorder_store_maintain(spark, path: str, cols: Sequence,
     fails loudly on the version commit (append-only log, see
     :func:`zorder_store_init`) rather than corrupting the store.
 
-    The new base's manifest is rebuilt by one distributed footer job
-    over the files the rewrite just produced and committed alongside
-    it — reads keep paying zero footer I/O.
+    The new base is written with the store's bloom filters, and its
+    manifest is rebuilt by one footer job over the files the rewrite
+    just produced and committed alongside it — reads keep paying zero
+    footer I/O. Directories of the retired md5 bloom index
+    (``bloom-v{N}``) on a legacy store are pruned with the old bases.
 
     Returns stats: ``{"rewritten": bool, "base_bytes": int,
     "tail_bytes": int}``.
     """
     from lindel_spark import fs as _fs
 
-    v = _zstore_latest(spark, path)
-    if v is None:
-        raise FileNotFoundError(f"LINDEL: no zorder store at {path}")
+    v, meta, schema = _zstore_current(spark, path)
     base_dir = _fs.join(path, f"base-v{v}")
     tail_dir = _fs.join(path, "tail")
     bb, _nb = _fs.du_suffix(spark, base_dir)
@@ -606,28 +611,22 @@ def zorder_store_maintain(spark, path: str, cols: Sequence,
     # snapshot describes only files visible in the later tail listing
     # (appends write data first, stats after), so deleting exactly
     # these two snapshots never orphans a live tail file's stats
-    mtail_dir = _fs.join(path, "manifest-tail")
-    mtail_parts = _fs.list_files(spark, mtail_dir)
-    btail_parts = _fs.list_files(spark, _fs.join(path, "bloom-tail"))
+    mtail_parts = _fs.list_files(spark, _fs.join(path, "manifest-tail"))
     tail_files = _fs.list_files(spark, tail_dir)
-    merged = spark.read.parquet(base_dir)
+    read = spark.read.schema(schema)
+    merged = read.parquet(base_dir)
     if tail_files:
-        merged = merged.unionByName(spark.read.parquet(*tail_files))
+        merged = merged.unionByName(read.parquet(*tail_files))
     if dsnap:
         merged = _zstore_apply_deletes(spark, path, merged,
                                        files=dsnap)
     new_base = _fs.join(path, f"base-v{v + 1}")
-    zorder_write(merged, cols, new_base, **zorder_kwargs)
-    meta = _zstore_meta(spark, path)
-    stat_cols = meta["stat_cols"]
-    if stat_cols:
+    zorder_write(merged, cols, new_base,
+                 **_bloom_options(meta["bloom_cols"]), **zorder_kwargs)
+    if meta["stat_cols"]:
         _write_manifest(spark, new_base,
-                        _fs.join(path, f"manifest-v{v + 1}"), stat_cols)
-    if meta["bloom_cols"]:
-        _write_bloom_manifest(spark, new_base,
-                              _fs.join(path, f"bloom-v{v + 1}"),
-                              meta["bloom_cols"], meta["bloom_m_bits"],
-                              meta["bloom_k"])
+                        _fs.join(path, f"manifest-v{v + 1}"),
+                        meta["stat_cols"])
     _zstore_commit(spark, path, v + 1)
     # retain the immediately-previous base for time travel; prune older
     for d in _fs.list_names(spark, path):
@@ -635,9 +634,7 @@ def zorder_store_maintain(spark, path: str, cols: Sequence,
              or d.startswith("bloom-v"))
                 and int(d.rsplit("-v", 1)[1]) < v):
             _fs.delete(spark, _fs.join(path, d), recursive=True)
-    for f in tail_files:
-        _fs.delete(spark, f, recursive=False)
-    for f in mtail_parts + btail_parts:
+    for f in tail_files + mtail_parts:
         _fs.delete(spark, f, recursive=False)
     # tombstones are physically folded into base-v{N+1}: clear exactly
     # the snapshotted files (a concurrent delete's parts stay pending)
@@ -647,243 +644,116 @@ def zorder_store_maintain(spark, path: str, cols: Sequence,
     return {"rewritten": True, "base_bytes": bb, "tail_bytes": tb}
 
 
-def zorder_store_select(spark, path: str, ranges: dict
+def _zstore_pruned_read(spark, path: str, ranges: dict,
+                        residual: Column, current: tuple
                         ) -> tuple[DataFrame, dict]:
-    """Range-predicate read of an incremental z-order store with
-    FILE-level pruning from the store's PERSISTED manifest: the stats
-    written once at init/maintain (base) and incrementally at append
-    (tail) are read back and filtered — NO parquet footer is opened at
-    query time (round-8 verdict: rebuilding the manifest per query
-    re-paid the metadata cost the index exists to eliminate; a pytest
-    now pins zero footer reads). Per-file stats are tight on the base
-    because it is z-ordered; tail files carry whatever ranges they
-    have, and files without a stats row (legacy stores, stats written
-    by a concurrent append still in flight) are scanned
-    conservatively. Both sides apply the exact row-level filter.
-
-    The pruning filter runs DISTRIBUTED over the manifest parquet and
-    only the SURVIVING file paths are collected (survivor-sized, never
-    file-count-sized — the driver holds the files the query actually
-    reads, which it must enumerate for the scan anyway). On a
-    million-file store a selective range query collects the handful of
-    matching paths, not the million-row manifest.
-
-    ``ranges`` maps column -> (lo, hi) inclusive bounds (None open).
-    Returns ``(df, stats)`` where stats carries the base's
-    ``files_total`` / ``files_scanned`` plus ``tail_files_total`` /
-    ``tail_files_scanned`` for skip-ratio audits.
-
-    Round 10: a range that COLLAPSES TO EQUALITY (``lo == hi``) on a
-    bloom-indexed column additionally intersects the min/max survivors
-    with the persisted bloom index's admitted files — min/max bounds
-    on an unclustered column admit almost everything for a point
-    probe, the bloom bitset doesn't (no false negatives, so the
-    intersection is always safe). Tail files keep the advisory-index
-    contract: a file with no bloom row yet is never bloom-pruned.
-    """
+    """The store's one read path: base and tail files that survive
+    min/max pruning of ``ranges``, computed on the DRIVER from the
+    persisted manifests (pyarrow + NumPy, no Spark job), scanned with
+    the store's schema and filtered by ``residual``. A NULL stat never
+    prunes; a listed tail file with no stats row yet (a concurrent
+    append's stats still in flight) is scanned; a store without a
+    manifest scans every base file. ``current`` is
+    :func:`_zstore_current`'s snapshot."""
     from lindel_spark import fs as _fs
-    from lindel_spark.profile import (_minmax_survivor_pred,
-                                      bloom_survivors,
-                                      file_minmax_manifest,
-                                      manifest_pruned_read,
+    from lindel_spark.profile import (_read_parquet_parts,
+                                      _strip_file_scheme,
                                       minmax_survivor_stats)
 
-    v = _zstore_latest(spark, path)
-    if v is None:
-        raise FileNotFoundError(f"LINDEL: no zorder store at {path}")
+    v, meta, schema = current
     base_dir = _fs.join(path, f"base-v{v}")
-    residual = F.lit(True)
-    for c, (lo, hi) in ranges.items():
-        if lo is not None:
-            residual = residual & (F.col(c) >= F.lit(lo))
-        if hi is not None:
-            residual = residual & (F.col(c) <= F.lit(hi))
-
-    meta = _zstore_meta(spark, path)
-    eq_bloom = {
-        c: lo for c, (lo, hi) in ranges.items()
-        if lo is not None and lo == hi and c in meta["bloom_cols"]
-    }
-    stat_cols = set(_zstore_stat_cols(spark, path))
-    man_dir = _fs.join(path, f"manifest-v{v}")
-    if stat_cols and _fs.is_dir(spark, man_dir):
-        man = spark.read.parquet(man_dir)
-        total, keep = minmax_survivor_stats(man, ranges, stat_cols)
-        if eq_bloom and keep:
-            bparts = _fs.list_files(spark, _fs.join(path,
-                                                    f"bloom-v{v}"))
-            if bparts:
-                bman = spark.read.parquet(*bparts)
-                for c, val in eq_bloom.items():
-                    _bt, bkeep = bloom_survivors(
-                        bman.filter(F.col("col") == c), val,
-                        meta["bloom_m_bits"], meta["bloom_k"])
-                    # the base bloom manifest is complete by
-                    # construction (written with the base), so the
-                    # intersection never drops an un-indexed file
-                    keep = sorted(set(keep) & set(bkeep))
-                    if not keep:
-                        break
-        stats = {"files_total": total, "files_scanned": len(keep)}
-        if keep:
-            out = spark.read.parquet(*keep).filter(residual)
-        else:
-            out = spark.read.parquet(base_dir).filter(residual).limit(0)
+    stat_cols = meta["stat_cols"]
+    man_parts = (_fs.list_files(spark, _fs.join(path, f"manifest-v{v}"))
+                 if stat_cols else [])
+    if man_parts:
+        total, scan = minmax_survivor_stats(
+            _read_parquet_parts(man_parts), ranges, stat_cols)
     else:
-        # legacy store without a persisted manifest: one footer sweep
-        manifest = file_minmax_manifest(spark, base_dir, list(ranges))
-        out, stats = manifest_pruned_read(spark, base_dir, manifest,
-                                          ranges)
-
-    from lindel_spark.profile import _strip_file_scheme
+        scan = [_strip_file_scheme(f)
+                for f in _fs.list_files(spark, base_dir)]
+        total = len(scan)
+    stats = {"files_total": total, "files_scanned": len(scan)}
 
     # normalize to the manifest's path form (list_files returns URIs,
     # the stats job records scheme-stripped paths)
-    tail_files = [
-        _strip_file_scheme(f)
-        for f in _fs.list_files(spark, _fs.join(path, "tail"))
-    ]
+    tail_files = [_strip_file_scheme(f)
+                  for f in _fs.list_files(spark, _fs.join(path, "tail"))]
+    tail_scan = tail_files
+    # reading the explicit part list (not the directory) snapshots
+    # against a concurrent maintainer draining the parts, and an
+    # all-drained directory simply yields no parts (round-9 ADVICE)
+    tail_parts = (_fs.list_files(spark, _fs.join(path, "manifest-tail"))
+                  if stat_cols and tail_files else [])
+    if tail_parts:
+        mtail = _read_parquet_parts(tail_parts)
+        _n, keep = minmax_survivor_stats(mtail, ranges, stat_cols)
+        known, keep = set(mtail.column("file").to_pylist()), set(keep)
+        # live listing is the source of truth: stats rows only ever
+        # REMOVE a listed file from the scan, never add one
+        tail_scan = [f for f in tail_files
+                     if f not in known or f in keep]
     stats["tail_files_total"] = len(tail_files)
-    if tail_files:
-        # guard on the tail-stats dir actually CONTAINING parquet
-        # parts, not merely existing: maintenance drains the parts
-        # file-by-file but LocalFileSystem keeps the dir (with only
-        # _SUCCESS) alive, and reading an all-deleted directory throws
-        # 'Unable to infer schema' instead of the documented
-        # conservative tail scan (round-9 ADVICE). Reading the
-        # explicit part list also snapshots against a concurrent
-        # maintainer deleting parts between the check and the read.
-        mtail_parts = _fs.list_files(
-            spark, _fs.join(path, "manifest-tail")) if stat_cols else []
-        scan = tail_files
-        if mtail_parts:
-            mtail = spark.read.parquet(*mtail_parts)
-            # one pass: every known tail-stats row with its survive
-            # bit (tail-count-sized, strings + booleans — the round-9
-            # shape collected the same rows twice)
-            pred = _minmax_survivor_pred(mtail.columns, ranges,
-                                         stat_cols)
-            rows = mtail.select("file", pred.alias("__s")).collect()
-            known = {r["file"] for r in rows}
-            with_stats = {r["file"] for r in rows if r["__s"]}
-            # live listing is the source of truth: stats rows only
-            # ever REMOVE a listed file from the scan, never add one
-            scan = sorted(
-                f for f in tail_files
-                if f not in known or f in with_stats
-            )
-        if eq_bloom and scan:
-            btail_parts = _fs.list_files(spark,
-                                         _fs.join(path, "bloom-tail"))
-            if btail_parts:
-                bt = spark.read.parquet(*btail_parts)
-                for c, val in eq_bloom.items():
-                    btc = bt.filter(F.col("col") == c)
-                    _t, hits = bloom_survivors(
-                        btc, val, meta["bloom_m_bits"],
-                        meta["bloom_k"])
-                    bknown = {r["file"] for r in
-                              btc.select("file").distinct().collect()}
-                    hset = set(hits)
-                    # advisory: a tail file with no bloom row yet is
-                    # never bloom-pruned
-                    scan = sorted(f for f in scan
-                                  if f not in bknown or f in hset)
-        stats["tail_files_scanned"] = len(scan)
-        if scan:
-            out = out.unionByName(
-                spark.read.parquet(*scan).filter(residual))
-    else:
-        stats["tail_files_scanned"] = 0
+    stats["tail_files_scanned"] = len(tail_scan)
+
+    files = scan + tail_scan
+    out = (spark.read.schema(schema).parquet(*files).filter(residual)
+           if files else spark.createDataFrame([], schema))
     # tombstones are always applied on current-timeline reads
     return _zstore_apply_deletes(spark, path, out), stats
+
+
+def zorder_store_select(spark, path: str, ranges: dict
+                        ) -> tuple[DataFrame, dict]:
+    """Range-predicate read of an incremental z-order store with
+    FILE-level pruning from the store's PERSISTED manifest (written
+    once at init/maintain for the base, incrementally at append for
+    the tail), pruned on the driver: NO Spark job runs before the data
+    scan and NO parquet footer is opened at query time (a pytest pins
+    zero footer reads). Per-file stats are tight on the base because
+    it is z-ordered; tail files carry whatever ranges they have.
+
+    ``ranges`` maps column -> (lo, hi) inclusive bounds (None open);
+    a ``lo == hi`` range filters by equality, so Parquet bloom
+    filters on a ``bloom_cols`` column can drop row groups too.
+    Returns ``(df, stats)`` where stats carries the base's
+    ``files_total`` / ``files_scanned`` plus ``tail_files_total`` /
+    ``tail_files_scanned`` for skip-ratio audits.
+    """
+    from lindel_spark.profile import range_residual
+
+    return _zstore_pruned_read(spark, path, ranges, range_residual(ranges),
+                               _zstore_current(spark, path))
 
 
 def zorder_store_lookup(spark, path: str, col: str, value,
                         value_type: str | None = None
                         ) -> tuple["DataFrame", dict]:
-    """Equality-probe read of an incremental z-order store through its
-    PERSISTED per-file bloom index: scan only the files whose bitset
-    admits ``value`` — the point-lookup complement of
-    :func:`zorder_store_select` (min/max prunes ranges on the
-    clustered columns; the bloom index prunes ``col = value`` on ANY
-    indexed column). No data file or footer is opened to decide the
-    scan set; the probe runs DISTRIBUTED over the bloom manifest and
-    only surviving paths reach the driver (the bitsets — 128 KiB per
-    file at the default geometry — never do; round-9 verdict item 1).
+    """Equality-probe read of an incremental z-order store: ``col =
+    value`` through :func:`zorder_store_select`'s driver-pruned read
+    (min/max on ``(value, value)`` when ``col`` is a stat column); the
+    Parquet reader then drops every row group whose bloom filter rules
+    ``value`` out, so an absent key reads no records.
 
     ``col`` must be in the store's ``bloom_cols`` (recorded at init).
-    Files without a bloom row — a concurrent append's data landed but
-    its index row hasn't yet — are scanned conservatively, same
-    advisory-stats contract as the min/max tail. Pass ``value_type``
-    to pin the probe literal to the column's Spark type when Python's
-    literal type differs (e.g. ``'float'`` for a FloatType column).
-    Returns ``(df, stats)`` with files_total / files_scanned /
-    tail_files_total / tail_files_scanned.
+    Pass ``value_type`` to pin the probe literal to the column's Spark
+    type when Python's literal type differs (e.g. ``'float'`` for a
+    FloatType column); such a cast probe skips min/max pruning, whose
+    bounds compare the uncast value. Returns ``(df, stats)`` like
+    select: files_scanned counts min/max survivors, so it equals
+    files_total when ``col`` is not a stat column.
     """
-    from lindel_spark import fs as _fs
-    from lindel_spark.profile import _strip_file_scheme, bloom_survivors
-
-    v = _zstore_latest(spark, path)
-    if v is None:
-        raise FileNotFoundError(f"LINDEL: no zorder store at {path}")
-    meta = _zstore_meta(spark, path)
-    if col not in meta["bloom_cols"]:
+    current = _zstore_current(spark, path)
+    if col not in current[1]["bloom_cols"]:
         raise ValueError(
             f"LINDEL: column {col!r} is not bloom-indexed in this store "
-            f"(bloom_cols={meta['bloom_cols']}) — pass bloom_cols= at "
+            f"(bloom_cols={current[1]['bloom_cols']}) — pass bloom_cols= at "
             f"zorder_store_init")
-    m_bits, k = meta["bloom_m_bits"], meta["bloom_k"]
-    base_dir = _fs.join(path, f"base-v{v}")
-    residual = F.col(col) == (
-        F.lit(value).cast(value_type) if value_type is not None
-        else F.lit(value))
-
-    bman_dir = _fs.join(path, f"bloom-v{v}")
-    bparts = _fs.list_files(spark, bman_dir)
-    if bparts:
-        man = spark.read.parquet(*bparts).filter(F.col("col") == col)
-        total, keep = bloom_survivors(man, value, m_bits, k, value_type)
-        stats = {"files_total": total, "files_scanned": len(keep)}
-        out = (spark.read.parquet(*keep).filter(residual) if keep
-               else spark.read.parquet(base_dir).filter(residual)
-               .limit(0))
+    if value_type is None:
+        probe, ranges = F.lit(value), {col: (value, value)}
     else:
-        # no persisted base index (crashed init?): conservative scan
-        n = len(_fs.list_files(spark, base_dir))
-        stats = {"files_total": n, "files_scanned": n}
-        out = spark.read.parquet(base_dir).filter(residual)
-
-    tail_files = [
-        _strip_file_scheme(f)
-        for f in _fs.list_files(spark, _fs.join(path, "tail"))
-    ]
-    stats["tail_files_total"] = len(tail_files)
-    if tail_files:
-        btail_parts = _fs.list_files(spark, _fs.join(path, "bloom-tail"))
-        scan = tail_files
-        if btail_parts:
-            btail = (spark.read.parquet(*btail_parts)
-                     .filter(F.col("col") == col))
-            _bt_total, hits = bloom_survivors(btail, value, m_bits, k,
-                                              value_type)
-            known_rows = btail.select("file").distinct().collect()
-            known = {r["file"] for r in known_rows}
-            hit_set = set(hits)
-            # live listing is the source of truth: index rows only
-            # ever REMOVE a listed file from the scan, never add one
-            scan = sorted(
-                f for f in tail_files
-                if f not in known or f in hit_set
-            )
-        stats["tail_files_scanned"] = len(scan)
-        if scan:
-            out = out.unionByName(
-                spark.read.parquet(*scan).filter(residual))
-    else:
-        stats["tail_files_scanned"] = 0
-    # tombstones are always applied on current-timeline reads
-    return _zstore_apply_deletes(spark, path, out), stats
+        probe, ranges = F.lit(value).cast(value_type), {}
+    return _zstore_pruned_read(spark, path, ranges, F.col(col) == probe,
+                               current)
 
 
 # ---------------------------------------------------------------------------
@@ -960,7 +830,8 @@ def zorder_store_vacuum(spark, path: str,
                         keep_versions: int = 2) -> dict:
     """Retention vacuum for the incremental z-order store: keep the
     newest ``keep_versions`` committed base versions (with their
-    manifests and bloom indexes), physically delete everything older.
+    manifests), physically delete everything older — including a
+    legacy store's ``bloom-v{N}`` md5 bloom-index directories.
     :func:`zorder_store_maintain` hard-codes a keep-2 prune for time
     travel; vacuum makes retention a policy — and
     ``keep_versions=1`` is the GDPR COMPLETION step: after a

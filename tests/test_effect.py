@@ -197,11 +197,14 @@ def test_zorder_store_append_maintain_cycle(spark, tmp_path_factory):
         LW.zorder_store_read(spark, store, version=99)
 
 
-def test_zorder_store_bloom_lookup_cycle(spark, tmp_path_factory):
-    """Round-10 store bloom index: per-file bitsets persist at init,
-    append incrementally, rebuild at maintain; equality probes scan
-    only admitted files; a tail data file whose index row hasn't
-    landed is scanned conservatively (advisory-index contract)."""
+def test_zorder_store_bloom_lookup_cycle(spark, tmp_path_factory,
+                                        traced):
+    """Store bloom filters: native Parquet bloom filters written at
+    init, append and maintain; an equality probe runs no Spark job
+    before its scan, counts in at most the scan's own 2 jobs, and an
+    absent key inside a file's [min, max] reads no records; a tail
+    data file whose stats row hasn't landed is scanned conservatively
+    (advisory-index contract)."""
     import pytest as _p
 
     li = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet"))
@@ -227,19 +230,24 @@ def test_zorder_store_bloom_lookup_cycle(spark, tmp_path_factory):
     st = LW.zorder_store_maintain(spark, store, cols, tail_ratio=0.01,
                                   **opts)
     assert st["rewritten"] is True
-    # bloom-v{new} rebuilt, bloom-tail drained
-    v = max(int(d.split("-v")[1]) for d in os.listdir(store)
-            if d.startswith("base-v"))
-    assert os.path.isdir(os.path.join(store, f"bloom-v{v}"))
-    import glob as _glob
-    assert _glob.glob(os.path.join(store, "bloom-tail",
-                                   "*.parquet")) == []
-    hits, stats = LW.zorder_store_lookup(spark, store, "l_orderkey",
-                                         probe)
-    assert hits.count() == want
+    (hits, stats), n_jobs, _ = traced(
+        lambda: LW.zorder_store_lookup(spark, store, "l_orderkey", probe))
+    assert n_jobs == 0  # pruning ran on the driver
+    assert stats["tail_files_total"] == 0
+    n, n_jobs, _ = traced(hits.count)
+    assert n == want and n_jobs <= 2
     assert stats["files_scanned"] < stats["files_total"]
 
-    # data-before-index append window: raw tail file, no bloom row yet
+    # an absent key that min/max cannot prune: the bloom filters can
+    keys = {r[0] for r in li.select("l_orderkey").distinct().collect()}
+    absent = next(k for k in range(min(keys), max(keys)) if k not in keys)
+    miss, mstats = LW.zorder_store_lookup(spark, store, "l_orderkey",
+                                          absent)
+    assert mstats["files_scanned"] >= 1
+    n, n_jobs, records = traced(miss.count)
+    assert (n, records) == (0, 0) and n_jobs <= 2
+
+    # data-before-index append window: raw tail file, no stats row yet
     extra = li.filter(F.col("l_orderkey") == probe).limit(3)
     n_extra = extra.count()
     extra.write.mode("append").parquet(os.path.join(store, "tail"))
@@ -247,6 +255,77 @@ def test_zorder_store_bloom_lookup_cycle(spark, tmp_path_factory):
                                          probe)
     assert stats["tail_files_scanned"] == stats["tail_files_total"] == 1
     assert hits.count() == want + n_extra
+
+
+def test_zorder_store_append_checks_schema(spark, tmp_path_factory):
+    """Append compares the frame's columns and types with the schema
+    recorded at init: a matching frame (any column order) round-trips,
+    an extra or retyped column raises instead of being silently
+    dropped or nulled by the store's named-schema reads."""
+    li = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet"))
+    cols = [F.col("l_orderkey").cast("int"),
+            F.col("l_partkey").cast("int")]
+    store = str(tmp_path_factory.mktemp("zschema") / "s")
+    LW.zorder_store_init(li.filter("l_orderkey % 5 != 0"), cols, store,
+                         stat_cols=["l_orderkey"], elem="int32",
+                         num_files=4)
+    tail = li.filter("l_orderkey % 5 = 0")
+    LW.zorder_store_append(tail.select(*reversed(tail.columns)), store)
+    assert LW.zorder_store_read(spark, store).count() == li.count()
+    with pytest.raises(ValueError, match="LINDEL: .*extra"):
+        LW.zorder_store_append(tail.withColumn("extra", F.lit(1)), store)
+    with pytest.raises(ValueError, match="LINDEL: .*l_quantity"):
+        LW.zorder_store_append(
+            tail.withColumn("l_quantity", F.col("l_quantity").cast("string")),
+            store)
+    assert LW.zorder_store_read(spark, store).count() == li.count()
+    with pytest.raises(TypeError, match="bloom_m_bits"):
+        LW.zorder_store_init(li, cols, store + "2", bloom_m_bits=1 << 10)
+
+
+def test_zorder_store_legacy_layout(spark, tmp_path_factory):
+    """A store in the earlier layout — ``_META`` without a schema but
+    with the md5 bloom geometry keys, and a ``bloom-v0`` bitset dir —
+    still reads exactly (schema inferred, base without native bloom
+    filters scanned), and maintain + vacuum(keep_versions=1) clear its
+    ``bloom-v*`` dirs."""
+    import json
+
+    from lindel_spark import profile as LP
+
+    li = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet"))
+    cols = [F.col("l_orderkey").cast("int"),
+            F.col("l_partkey").cast("int")]
+    store = str(tmp_path_factory.mktemp("zlegacy") / "s")
+    opts = {"elem": "int32", "num_files": 4}
+    LW.zorder_write(li.filter("l_orderkey % 5 != 0"), cols,
+                    os.path.join(store, "base-v0"), **opts)
+    LW._write_manifest(spark, os.path.join(store, "base-v0"),
+                       os.path.join(store, "manifest-v0"), ["l_orderkey"])
+    LP.file_bloom_manifest(spark, os.path.join(store, "base-v0"),
+                           "l_orderkey", m_bits=1 << 10) \
+        .withColumn("col", F.lit("l_orderkey")) \
+        .write.parquet(os.path.join(store, "bloom-v0"))
+    with open(os.path.join(store, "_META"), "w") as fh:
+        json.dump({"stat_cols": ["l_orderkey"],
+                   "bloom_cols": ["l_orderkey"],
+                   "bloom_m_bits": 1 << 10, "bloom_k": 7}, fh)
+    LW._zstore_commit(spark, store, 0)
+    LW.zorder_store_append(li.filter("l_orderkey % 5 = 0"), store)
+
+    hits, _ = LW.zorder_store_select(spark, store,
+                                     {"l_orderkey": (1000, 2000)})
+    assert hits.count() == li.filter(
+        "l_orderkey between 1000 and 2000").count()
+    probe = int(li.selectExpr("min(l_orderkey)").first()[0]) + 999
+    hits, _ = LW.zorder_store_lookup(spark, store, "l_orderkey", probe)
+    assert hits.count() == li.filter(F.col("l_orderkey") == probe).count()
+
+    assert LW.zorder_store_maintain(spark, store, cols, tail_ratio=0.01,
+                                    **opts)["rewritten"]
+    LW.zorder_store_vacuum(spark, store, keep_versions=1)
+    assert [d for d in os.listdir(store) if d.startswith("bloom-v")] == []
+    assert LW.zorder_store_read(spark, store).count() == li.count()
 
 
 def test_zorder_store_select_survives_drained_manifest_tail(
@@ -283,19 +362,17 @@ def test_zorder_store_select_survives_drained_manifest_tail(
 
 
 def test_zorder_store_select_equality_consults_bloom(
-        spark, tmp_path_factory):
-    """Round-10: a lo==hi range on a bloom-indexed UNCLUSTERED column
-    intersects min/max survivors with the bloom index — the point
-    probe scans fewer files than min/max alone admits, results stay
-    exact, and a probe for an absent value scans zero base files."""
+        spark, tmp_path_factory, traced):
+    """A lo==hi range on a bloom column that is not a stat column
+    (min/max cannot prune it) filters by equality, so the Parquet
+    bloom filters drop row groups: results stay exact and an absent
+    value reads no records."""
     li = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet"))
     cols = [F.col("l_orderkey").cast("int"),
             F.col("l_partkey").cast("int")]
     store = str(tmp_path_factory.mktemp("zbloomsel") / "s")
-    # index l_suppkey: scattered w.r.t. the (orderkey, partkey) curve,
-    # so min/max bounds admit ~every file for a point probe
     LW.zorder_store_init(li, cols, store,
-                         stat_cols=["l_orderkey", "l_suppkey"],
+                         stat_cols=["l_orderkey"],
                          bloom_cols=["l_suppkey"],
                          elem="int32", num_files=16)
     probe = int(li.selectExpr("min(l_suppkey)").first()[0])
@@ -303,13 +380,12 @@ def test_zorder_store_select_equality_consults_bloom(
     hits, stats = LW.zorder_store_select(
         spark, store, {"l_suppkey": (probe, probe)})
     assert hits.count() == want
-    # absent value: bloom prunes everything min/max could not
-    absent = int(li.selectExpr("max(l_suppkey)").first()[0]) + 10**6
+    absent = int(li.selectExpr("max(l_suppkey)").first()[0]) + 1
     h0, s0 = LW.zorder_store_select(
         spark, store, {"l_suppkey": (absent, absent)})
-    assert h0.count() == 0
-    assert s0["files_scanned"] == 0
-    # true ranges (lo != hi) never consult the bloom index
+    assert s0["files_scanned"] == s0["files_total"]
+    n, _, records = traced(h0.count)
+    assert (n, records) == (0, 0)
     h1, s1 = LW.zorder_store_select(
         spark, store, {"l_suppkey": (probe, probe + 1)})
     assert h1.count() == li.filter(

@@ -130,12 +130,13 @@ def test_no_driver_local_io_in_store_metadata_paths():
 
 
 def test_zorder_store_select_prunes_base_files(spark, tmp_path_factory,
-                                               monkeypatch):
+                                               monkeypatch, traced):
     """zorder_store_select: lossless vs a plain filter, actually skips
     base files under a narrow range predicate, and — round-9 verdict
     item 1 — reads the PERSISTED manifest: after the store is built,
     the footer-sweep builder is poisoned, so a select that touched any
-    parquet footer would blow up."""
+    parquet footer would blow up. Pruning runs on the driver: building
+    the select runs no Spark job and counting it only the scan's."""
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     li = spark.read.parquet(os.path.join(sf, "lineitem.parquet"))
     cols = [F.col("l_orderkey").cast("int"),
@@ -153,13 +154,20 @@ def test_zorder_store_select_prunes_base_files(spark, tmp_path_factory,
             "zorder_store_select swept parquet footers at query time")
 
     monkeypatch.setattr(LP, "file_minmax_manifest", _boom)
-    hits, stats = LW.zorder_store_select(
-        spark, store, {"l_orderkey": (1000, 2000)})
+    (hits, stats), n_jobs, _ = traced(lambda: LW.zorder_store_select(
+        spark, store, {"l_orderkey": (1000, 2000)}))
+    assert n_jobs == 0
     want = li.filter("l_orderkey between 1000 and 2000")
-    assert hits.count() == want.count()
+    n, n_jobs, _ = traced(hits.count)
+    assert n == want.count() and n_jobs <= 2
     assert (hits.agg(F.sum("l_quantity")).first()[0]
             == want.agg(F.sum("l_quantity")).first()[0])
     assert stats["files_scanned"] < stats["files_total"]
+    # no survivor at all: an empty frame of the store's schema, no job
+    (none, stats), n_jobs, _ = traced(lambda: LW.zorder_store_select(
+        spark, store, {"l_orderkey": (10**9, None)}))
+    assert n_jobs == 0 and stats["files_scanned"] == 0
+    assert none.count() == 0 and none.schema == hits.schema
 
 
 def test_zorder_store_append_incremental_stats(spark, tmp_path_factory):
