@@ -30,6 +30,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _exact_sum(c: str):
+    """Sum of a double column whose values lie in [0, 1] (PageRank
+    contributions, the dangling total), independent of summation
+    order: each value is cast to decimal(38,30) and decimal addition
+    is associative, so every partition layout and shuffle arrival
+    order gives the same bits. Eight integer digits keep the sum far
+    from overflow; the 1e-30 quantum sits far below a double's ulp at
+    any rank >= (1-d)/n."""
+    return F.sum(F.col(c).cast("decimal(38,30)")).cast("double")
+
+
+def _sorted_sum(c: str):
+    """Sum of a double column of any range (edge weights), independent
+    of layout: the values are sorted before a sequential fold, so every
+    layout adds them in one order. Integer-valued weights (counts) give
+    the plain sum exactly. Runs once per graph, not per iteration."""
+    return F.aggregate(F.sort_array(F.collect_list(c)), F.lit(0.0),
+                       lambda acc, x: acc + x)
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 10,
@@ -48,8 +68,12 @@ def pagerank(
     via a broadcast one-row frame — kept lazy, no per-iteration
     driver action. ``iterations`` is fixed rather than
     convergence-tested so results are deterministic and replayable by
-    an unrolled SQL oracle. Every ``checkpoint_every`` iterations the
-    rank frame is ``localCheckpoint``-ed to keep plan depth bounded.
+    an unrolled SQL oracle. The per-node contribution sums and the
+    dangling total are exact decimal sums, and each node's out-weight
+    is summed in sorted order, so no sum depends on the order in which
+    partial aggregates arrive: ranks are bit-identical under any
+    partitioning of ``edges``. Every ``checkpoint_every`` iterations
+    the rank frame is ``localCheckpoint``-ed to keep plan depth bounded.
 
     ``checkpoint_every`` defaults to 1 (round 16): with AQE every
     stage boundary re-optimizes the REMAINING plan, so an unbounded
@@ -84,7 +108,7 @@ def pagerank(
     n = nodes.count()  # node count: the one bounded driver scalar
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))
-    outw = e.groupBy("__src").agg(F.sum("__w").alias("__wout"))
+    outw = e.groupBy("__src").agg(_sorted_sum("__w").alias("__wout"))
     # the edges⋈out-weights join is iteration-invariant: materialize
     # it ONCE (round-15; guide §2.4) instead of re-joining every
     # iteration — per iteration only the node-sized rank frame is
@@ -100,7 +124,7 @@ def pagerank(
             .select(F.col("__dst").alias("node"),
                     (F.col("rank") * F.col("__w") / F.col("__wout"))
                     .alias("__c"))
-            .groupBy("node").agg(F.sum("__c").alias("__contrib"))
+            .groupBy("node").agg(_exact_sum("__c").alias("__contrib"))
         )
         # total rank is 1 by construction and every out-connected node
         # distributes its whole rank (Σ_j w_j/wout = 1), so the
@@ -108,7 +132,7 @@ def pagerank(
         # over contrib instead of an anti-join + rank rescan per
         # iteration.
         dangling = contrib.agg(
-            (F.lit(1.0) - F.coalesce(F.sum("__contrib"), F.lit(0.0)))
+            (F.lit(1.0) - F.coalesce(_exact_sum("__contrib"), F.lit(0.0)))
             .alias("__dangling"))
         ranks = (
             nodes.join(contrib, "node", "left")
@@ -155,7 +179,9 @@ def personalized_pagerank(
     Same execution contract as :func:`pagerank` — per iteration one
     edges⋈ranks join + map-side-combined aggregate on ``dst``,
     dangling mass as a broadcast one-row frame, fixed ``iterations``
-    (deterministic, unrolled-SQL-replayable), localCheckpoint
+    (deterministic, unrolled-SQL-replayable), exact decimal per-node
+    and dangling sums and sorted out-weight sums (ranks bit-identical
+    under any partitioning of ``edges`` and ``sources``), localCheckpoint
     lineage truncation per iteration (see :func:`pagerank` round-16
     note — AQE re-plans the remaining tail at every stage boundary,
     so deep iteration plans cost superlinear driver time; measured
@@ -193,7 +219,7 @@ def personalized_pagerank(
                           F.lit(1.0 / ns)).otherwise(F.lit(0.0))
                    .alias("__t"))
            .persist(StorageLevel.MEMORY_AND_DISK))
-    outw = e.groupBy("__src").agg(F.sum("__w").alias("__wout"))
+    outw = e.groupBy("__src").agg(_sorted_sum("__w").alias("__wout"))
     # iteration-invariant edges⋈out-weights hoisted out of the loop
     # (round-15; guide §2.4 — see pagerank above)
     eo = e.join(outw, "__src").persist(StorageLevel.MEMORY_AND_DISK)
@@ -204,10 +230,10 @@ def personalized_pagerank(
             .select(F.col("__dst").alias("node"),
                     (F.col("rank") * F.col("__w") / F.col("__wout"))
                     .alias("__c"))
-            .groupBy("node").agg(F.sum("__c").alias("__contrib"))
+            .groupBy("node").agg(_exact_sum("__c").alias("__contrib"))
         )
         dangling = contrib.agg(
-            (F.lit(1.0) - F.coalesce(F.sum("__contrib"), F.lit(0.0)))
+            (F.lit(1.0) - F.coalesce(_exact_sum("__contrib"), F.lit(0.0)))
             .alias("__dangling"))
         ranks = (
             tel.join(contrib, "node", "left")

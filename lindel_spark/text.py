@@ -1058,8 +1058,10 @@ def textrank_keywords(
     a long document can't quadratic-blow a task. Ranking reuses
     :func:`lindel_spark.graph.pagerank` (fixed iterations, dangling
     mass via one broadcast row — replayable by the same unrolled SQL
-    oracle); the final top-n window is over the vocabulary-sized rank
-    frame, never rows.
+    oracle; its exact sums make the scores bit-identical under any
+    partitioning of ``df``, which the determinism above rests on); the
+    final top-n window is over the vocabulary-sized rank frame, never
+    rows.
     """
     from lindel_spark.graph import pagerank
 

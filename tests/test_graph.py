@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from lindel_spark.graph import pagerank
+from lindel_spark.graph import pagerank, personalized_pagerank
 
 
 def test_pagerank_uniform_on_symmetric_cycle(spark):
@@ -59,6 +59,33 @@ def test_pagerank_matches_reference_power_iteration(spark):
            pagerank(edges, iterations=iters).collect()}
     for i in range(n):
         assert abs(got[i] - r[i]) < 1e-12, (i, got[i], r[i])
+
+
+def test_pagerank_ranks_bit_identical_across_layouts(spark):
+    """The same weighted edges read from one partition and from five
+    give bit-identical ranks: every sum is exact or taken in sorted
+    order, so the order in which partial aggregates arrive cannot move
+    a bit."""
+    import random
+
+    rnd = random.Random(11)
+    nodes = [f"n{i}" for i in range(12)]
+    # n11 has no out-edges (dangling); weights are not dyadic, so a
+    # double sum of them depends on its order
+    E = sorted({(s, t, round(rnd.uniform(0.1, 3.0), 3))
+                for s in nodes[:11] for t in rnd.sample(nodes, 5)
+                if s != t})
+    edges = spark.createDataFrame(E, "src string, dst string, w double")
+    seeds = spark.createDataFrame([("n0",), ("n7",)], "node string")
+
+    def ranks(df):
+        return (sorted(pagerank(df, iterations=6, weight="w").collect()),
+                sorted(personalized_pagerank(
+                    df, seeds, iterations=6, weight="w").collect()))
+
+    one, five = ranks(edges.repartition(1)), ranks(edges.repartition(5))
+    assert len(one[0]) == len(one[1]) == 12
+    assert one == five
 
 
 def test_pagerank_validates_iterations(spark):
