@@ -1,11 +1,11 @@
 """Vectorized NumPy kernels for Hilbert / Morton (Z-order) curves.
 
-Pure NumPy, no Spark dependency. These are the execution primitives
-behind the lindel_spark SQL surface, replacing the reference's per-row
-Rust FFI kernels (reference: duckdb_lindel_rust/src/lib.rs:81-339,
-called per row from src/lindel_extension.cpp:708,735,771) with
-whole-batch vector ops: O(total_bits) NumPy operations per Arrow batch
-instead of one FFI call per row.
+Pure NumPy, no Spark dependency: the reference implementation of the
+curve math.  The SQL surface runs the JVM port of these kernels
+(``lindel_spark/Curves.java``, the analogue of the reference's per-row
+Rust FFI kernels, duckdb_lindel_rust/src/lib.rs:81-339, called from
+src/lindel_extension.cpp:708,735,771); the tests compare the two bit
+for bit, and perfbench times these to report kernel cost per row.
 
 Algorithm (verified bit-exact against every golden value in the
 reference repo — test/sql/lindel.test:15-111, docs/README.md:117-287):
@@ -20,7 +20,7 @@ reference repo — test/sql/lindel.test:15-111, docs/README.md:117-287):
   inverse.
 
 Values wider than 64 bits (u128 outputs) are carried as (hi, lo)
-uint64 lane pairs; the Spark layer serializes them big-endian into
+uint64 lane pairs; the Spark functions return them big-endian as
 BinaryType so lexicographic binary order == unsigned numeric order.
 """
 

@@ -6,16 +6,19 @@ reference registration surface: src/lindel_extension.cpp:948-1026.
 Design (SURVEY §3.1): the Python wrapper does DuckDB-style *bind* work
 at DataFrame-construction time — element type + arity resolve the
 output Spark type from the ladder in :mod:`lindel_spark.types` — and
-execution is one Arrow-vectorized UDF per direction over whole batches
-(replacing the reference's per-row Rust FFI calls,
-src/lindel_extension.cpp:708,735,771).  Both encode call forms (an
-array column, a list of scalar columns) and the SQL names from
-:func:`register` feed the same encode UDF one ``array<elem>`` column.
+execution is one JVM UDF per direction (``lindel_spark/Curves.java``,
+built and loaded by :mod:`lindel_spark.jvm`), called per row inside the
+executor like the reference's per-row Rust FFI calls
+(src/lindel_extension.cpp:708,735,771): no batch leaves the JVM.  Both
+encode call forms (an array column, a list of scalar columns) and the
+SQL names from :func:`register` feed the same encode UDF one
+``array<elem>`` column.  :mod:`lindel_spark.curve` is the NumPy
+reference the tests hold these kernels to, bit for bit.
 
 Morton (both directions) additionally has a pure-Column "native" path
 for integer inputs with total width <= 64 bits: staged magic-number
-bit spreading that stays inside JVM whole-stage codegen with no
-Python round-trip at all.  Prefer it in hot paths.
+bit spreading that whole-stage codegen compiles into the scan's stage,
+with no UDF call and no boxing.
 
 NULL semantics (reference src/lindel_extension.cpp:684-694, 437-441):
 NULL array/input -> NULL result; NULL *element* inside an array ->
@@ -28,185 +31,60 @@ import operator
 from functools import reduce
 from typing import Sequence
 
-import numpy as np
-import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import arrow_udf
 
-from lindel_spark import curve
+from lindel_spark import jvm
 from lindel_spark.types import (
     DecodePlan,
-    ElemType,
     elem_type,
     encode_output_bits,
     encode_output_spark_type,
     resolve_decode,
-    signed_np_dtype,
 )
 
-_NULL_ELEM_MSG = "Lindel functions cannot handle arrays containing NULL values"
-
 
 # ---------------------------------------------------------------------------
-# Arrow plumbing (zero-copy between the JVM batch and the NumPy kernel)
+# the JVM UDFs (lindel_spark/Curves.java)
 # ---------------------------------------------------------------------------
 
-def _chunked(a):
-    return a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a
+def _register(spark: SparkSession, name: str, cls: str, args: tuple,
+              ret_type: T.DataType) -> None:
+    """Register ``lindel.Curves.<cls>(*args)`` as SQL function ``name``
+    in ``spark``, through the Java ``UDF1`` overload of
+    ``udf().register``."""
+    js = spark._jsparkSession
+    udf = getattr(jvm.curves(spark), cls)(*args)
+    js.udf().register(name, udf, js.parseDataType(ret_type.json()))
 
 
-def _np_bool(a: pa.Array) -> np.ndarray:
-    return _chunked(a).to_numpy(zero_copy_only=False).astype(bool, copy=False)
+def _call(cls: str, args: tuple, ret_type: T.DataType, col: Column) -> Column:
+    """``col`` through the JVM UDF ``lindel.Curves.<cls>(*args)``.
 
-
-def _np_to_binary_array(data2d: np.ndarray, mask: np.ndarray) -> pa.Array:
-    """(rows, w) uint8 matrix -> variable-width pa.binary() without any
-    per-row Python objects: one offsets buffer + the matrix itself."""
-    rows, w = data2d.shape
-    offsets = pa.py_buffer(np.arange(rows + 1, dtype=np.int32) * w)
-    databuf = pa.py_buffer(np.ascontiguousarray(data2d))
-    validity = None
-    nulls = 0
-    if mask.any():
-        validity = pa.py_buffer(np.packbits(~mask, bitorder="little"))
-        nulls = int(mask.sum())
-    return pa.Array.from_buffers(
-        pa.binary(), rows, [validity, offsets, databuf], null_count=nulls
-    )
-
-
-def _binary_to_matrix(v: pa.Array, in_bytes: int,
-                      mask: np.ndarray) -> np.ndarray:
-    """pa.binary() array -> (rows, in_bytes) uint8 matrix, vectorized.
-
-    Raises if any non-null value has the wrong width (the reference's
-    unsigned input types make that unrepresentable)."""
-    rows = len(v)
-    lengths = pc.binary_length(v).fill_null(in_bytes).to_numpy(
-        zero_copy_only=False
-    )
-    if (lengths != in_bytes).any():
-        bad = int(lengths[lengths != in_bytes][0])
-        raise ValueError(
-            f"LINDEL: decode expected {in_bytes}-byte binary, got {bad} bytes"
-        )
-    filled = pc.fill_null(v, b"\x00" * in_bytes)
-    validity, offbuf, databuf = filled.buffers()
-    off = np.frombuffer(offbuf, np.int32, rows + 1 + filled.offset)[
-        filled.offset:
-    ]
-    data = np.frombuffer(databuf, np.uint8)
-    return data[off[0]:off[0] + rows * in_bytes].reshape(rows, in_bytes)
-
-
-def _list_array(values: pa.Array, n: int, mask: np.ndarray) -> pa.Array:
-    """Flat values + fixed arity -> pa.list_ with nulls from ``mask``."""
-    rows = len(mask)
-    offs = np.arange(rows + 1, dtype=np.int32) * n
-    if mask.any():
-        offsets = pa.array(offs, pa.int32(),
-                           mask=np.append(mask, False))
-    else:
-        offsets = pa.array(offs, pa.int32())
-    return pa.ListArray.from_arrays(offsets, values)
-
-
-def _lanes_to_decimal128(hi: np.ndarray, lo: np.ndarray,
-                         mask: np.ndarray) -> pa.Array:
-    """(hi, lo) u64 lane pairs -> pa.decimal128(38, 0), vectorized.
-
-    Arrow decimal128 storage is a little-endian 128-bit integer; at
-    scale=0 the storage value IS the value, so the array is assembled
-    straight from the lane bytes — no per-row Python Decimal objects.
-    Callers guarantee values < 10^38 (the ≤126-bit bind-time cap in
-    types.py keeps 2^126 ≈ 8.5e37 inside decimal(38)).
+    The Column carries the UDF itself, not a registered name, so it
+    resolves in whichever session runs it: a ``foreachBatch`` batch,
+    for one, belongs to a session of its own.
     """
-    rows = len(lo)
-    buf = np.empty((rows, 16), np.uint8)
-    buf[:, :8] = np.ascontiguousarray(
-        lo.astype("<u8", copy=False)).view(np.uint8).reshape(rows, 8)
-    buf[:, 8:] = np.ascontiguousarray(
-        hi.astype("<u8", copy=False)).view(np.uint8).reshape(rows, 8)
-    validity = None
-    nulls = 0
-    if mask.any():
-        validity = pa.py_buffer(np.packbits(~mask, bitorder="little"))
-        nulls = int(mask.sum())
-    return pa.Array.from_buffers(
-        pa.decimal128(38, 0), rows, [validity, pa.py_buffer(buf)],
-        null_count=nulls,
-    )
+    curves = jvm.curves(SparkSession.active())
+    udf = getattr(curves, cls)(*args)
+    name = f"{args[0]}_{cls.lower()}"  # hilbert_encode, ... in plans
+    return Column(curves.column(udf, ret_type.json(), name, col._jc))
 
 
-def _encode_output(ret_type, hi, lo, mask, width_bytes) -> pa.Array:
-    if isinstance(ret_type, T.LongType):
-        return pa.array(lo.view(np.int64), pa.int64(), mask=mask)
-    if isinstance(ret_type, T.BinaryType):
-        return _np_to_binary_array(
-            curve.lanes_to_bytes(hi, lo, width_bytes), mask
-        )
-    # Decimal(38,0) output (opt-in; the 128-bit width is rejected at
-    # bind time in types.py — u128 values overflow 38 digits)
-    return _lanes_to_decimal128(hi, lo, mask)
+def _encode_output_mode(ret_type: T.DataType) -> str:
+    return {T.LongType(): "long", T.BinaryType(): "binary"}.get(
+        ret_type, "decimal")
 
 
-# ---------------------------------------------------------------------------
-# encode
-# ---------------------------------------------------------------------------
-
-def _encode_kernel(kind: str):
-    return curve.hilbert_encode_batch if kind == "hilbert" else curve.morton_encode_batch
+def _decode_output_mode(plan: DecodePlan) -> str:
+    if plan.want_float:
+        return "float"
+    return "unsigned" if plan.want_unsigned else "signed"
 
 
-def _decode_kernel(kind: str):
-    return curve.hilbert_decode_batch if kind == "hilbert" else curve.morton_decode_batch
-
-
-def _make_encode_udf(kind: str, et: ElemType, n: int, out_mode: str):
-    """Encode UDF over one ``array<elem>`` column of length ``n``.
-
-    Fully vectorized: Arrow keeps NULL list elements as true nulls (no
-    pandas NaN ambiguity), so the null-element error (reference
-    src/lindel_extension.cpp:690-694) is one ``null_count`` check and a
-    genuine float NaN remains a legal bit-cast input.  A NULL array maps
-    to a NULL key.
-    """
-    total_bits = encode_output_bits(et.bits, n)
-    ret_type = encode_output_spark_type(total_bits, out_mode)
-    width_bytes = total_bits // 8
-    kernel = _encode_kernel(kind)
-    np_dtype = et.np_dtype
-    elem_bits = et.bits
-
-    def fn(v: pa.Array) -> pa.Array:
-        v = _chunked(v)
-        rows = len(v)
-        mask = _np_bool(v.is_null())
-        lengths = pc.list_value_length(v).fill_null(n).to_numpy(
-            zero_copy_only=False
-        )
-        if (lengths != n).any():
-            bad = int(lengths[lengths != n][0])
-            raise ValueError(
-                f"LINDEL: expected array of length {n}, got ({bad},)"
-            )
-        flat = v.flatten()  # non-null lists' values, in row order
-        if flat.null_count:
-            raise ValueError(_NULL_ELEM_MSG)
-        vals = flat.to_numpy(zero_copy_only=False).astype(np_dtype, copy=False)
-        if mask.any():
-            X = np.zeros((rows, n), dtype=np_dtype)
-            X[~mask] = vals.reshape(-1, n)
-        else:
-            X = vals.reshape(rows, n)
-        U = curve.bitcast_to_unsigned(np.ascontiguousarray(X), elem_bits)
-        hi, lo = kernel(U, elem_bits)
-        return _encode_output(ret_type, hi, lo, mask, width_bytes)
-
-    return arrow_udf(fn, ret_type)
+def _decode_type(plan: DecodePlan) -> T.DataType:
+    return T.ArrayType(plan.spark_elem, containsNull=False)
 
 
 def _infer_elem(df, arr) -> str:
@@ -260,22 +138,25 @@ def _encode(kind: str, arr, elem, n, output):
     """Both call forms become one ``array<elem>`` column for the one
     encode UDF.  The Spark cast to ``elem`` runs first, so an
     out-of-range input raises ``CAST_OVERFLOW`` (ANSI) instead of
-    wrapping in NumPy."""
+    wrapping in the kernel."""
     et = elem_type(elem)
     if isinstance(arr, (list, tuple)):
         cols = [c if isinstance(c, Column) else F.col(c) for c in arr]
-        udf = _make_encode_udf(kind, et, len(cols), output)
+        n = len(cols)
         any_null = reduce(operator.or_, [c.isNull() for c in cols])
-        return udf(F.when(any_null, F.lit(None)).otherwise(
-            F.array(*[c.cast(et.spark_type) for c in cols])))
-    if n is None:
-        raise ValueError(
-            "LINDEL: pass n= (array length) when encoding an array column; "
-            "Spark arrays carry no bind-time length (SURVEY §7.4)"
-        )
-    udf = _make_encode_udf(kind, et, n, output)
-    col = arr if isinstance(arr, Column) else F.col(arr)
-    return udf(col.cast(T.ArrayType(et.spark_type)))
+        arg = F.when(any_null, F.lit(None)).otherwise(
+            F.array(*[c.cast(et.spark_type) for c in cols]))
+    else:
+        if n is None:
+            raise ValueError(
+                "LINDEL: pass n= (array length) when encoding an array "
+                "column; Spark arrays carry no bind-time length (SURVEY §7.4)"
+            )
+        col = arr if isinstance(arr, Column) else F.col(arr)
+        arg = col.cast(T.ArrayType(et.spark_type))
+    ret_type = encode_output_spark_type(encode_output_bits(et.bits, n), output)
+    return _call("Encode", (kind, et.bits, n, _encode_output_mode(ret_type)),
+                 ret_type, arg)
 
 
 def hilbert_encode(arr, elem: str | None = "int32", n: int | None = None,
@@ -314,8 +195,10 @@ def morton_encode(arr, elem: str | None = "int32", n: int | None = None,
     (including ``elem=None`` + ``df=`` schema inference).
 
     Reference: morton_encode, src/lindel_extension.cpp:498-510,969-978.
-    Note: for integer inputs with total width <= 64 prefer
-    :func:`morton_encode_native` (pure-Column, no Python round-trip).
+    Note: for integer inputs with total width <= 64,
+    :func:`morton_encode_native` builds the same key from Spark's own
+    bit operators, compiled into the stage by whole-stage codegen with
+    no UDF call and no boxing of the inputs.
     """
     return _encode("morton", arr, _resolve_elem(arr, elem, df), n, output)
 
@@ -323,68 +206,6 @@ def morton_encode(arr, elem: str | None = "int32", n: int | None = None,
 # ---------------------------------------------------------------------------
 # decode
 # ---------------------------------------------------------------------------
-
-def _make_decode_udf(kind: str, plan: DecodePlan, binary_input: bool):
-    ret_type = T.ArrayType(plan.spark_elem, containsNull=False)
-    kernel = _decode_kernel(kind)
-    n, elem_bits, in_width = plan.nparts, plan.elem_bits, plan.input_width
-    in_bytes = in_width // 8
-
-    def fn(v: pa.Array) -> pa.Array:
-        v = _chunked(v)
-        mask = _np_bool(v.is_null())
-        rows = len(v)
-        if binary_input:
-            hi, lo = curve.bytes_to_lanes(_binary_to_matrix(v, in_bytes, mask))
-        else:
-            lo = (
-                pc.fill_null(v, 0)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64, copy=False)
-                .view(np.uint64)
-            )
-            if in_width < 64:
-                # The reference's unsigned input types make out-of-range
-                # values unrepresentable (src/lindel_extension.cpp:983-
-                # 1001); raise rather than silently truncate to
-                # plausible coordinates.
-                excess = (lo & ~np.uint64((1 << in_width) - 1)) != 0
-                if (excess & ~mask).any():
-                    raise ValueError(
-                        f"LINDEL: decode input exceeds u{in_width} range; "
-                        "pass the correct input_width"
-                    )
-            hi = np.zeros(rows, np.uint64)
-        if in_width == 128 and n == 1:
-            # u128 round-trip: 16-byte big-endian binary carrier.
-            values = _np_to_binary_array(
-                curve.lanes_to_bytes(hi, lo, 16), np.zeros(rows, bool)
-            )
-            return _list_array(values, 1, mask)
-        Xu = kernel(hi, lo, n, elem_bits)
-        if plan.want_float:
-            dt = np.float32 if elem_bits == 32 else np.float64
-            Xc = curve.bitcast_from_unsigned(
-                Xu.astype(curve.unsigned_dtype(elem_bits)), dt
-            )
-        elif plan.want_unsigned:
-            if elem_bits == 64:
-                flat = np.ascontiguousarray(Xu.ravel().astype(np.uint64))
-                vals = _lanes_to_decimal128(
-                    np.zeros(flat.size, np.uint64), flat,
-                    np.zeros(flat.size, bool),
-                )
-                return _list_array(vals, n, mask)
-            Xc = Xu.astype(signed_np_dtype(elem_bits * 2))
-        else:
-            Xc = curve.bitcast_from_unsigned(
-                Xu.astype(curve.unsigned_dtype(elem_bits)),
-                signed_np_dtype(elem_bits),
-            )
-        return _list_array(pa.array(Xc.ravel()), n, mask)
-
-    return arrow_udf(fn, ret_type)
-
 
 def _decode(kind: str, col, nparts: int, want_float: bool, want_unsigned: bool,
             input_width: int | None, binary_input: bool | None):
@@ -402,8 +223,10 @@ def _decode(kind: str, col, nparts: int, want_float: bool, want_unsigned: bool,
     plan = resolve_decode(input_width, nparts, want_float, want_unsigned)
     if binary_input is None:
         binary_input = input_width == 128
-    udf = _make_decode_udf(kind, plan, binary_input)
-    return udf(col)
+    carrier = T.BinaryType() if binary_input else T.LongType()
+    return _call("Decode", (kind, plan.elem_bits, nparts,
+                            _decode_output_mode(plan)),
+                 _decode_type(plan), col.cast(carrier))
 
 
 def hilbert_decode(col, nparts: int, want_float: bool = False,
@@ -488,7 +311,7 @@ def morton_encode_native(cols: Sequence, elem: str | None = "int32",
 
     Generates staged shift-or bit spreading that runs entirely inside
     JVM whole-stage codegen — the scale path for z-order writes (no
-    JVM<->Python Arrow hop).  Bit-identical to :func:`morton_encode`.
+    UDF call).  Bit-identical to :func:`morton_encode`.
     ``elem=None`` + ``df=`` infers the element type from the schema.
     """
     et = elem_type(_resolve_elem(cols, elem, df))
@@ -603,12 +426,12 @@ def register(spark: SparkSession, elems=("int8", "int16", "int32", "int64",
             for n in range(1, max_n + 1):
                 name = f"{kind}_encode_{et.name}_{n}"
                 impl = f"__lindel_impl_{name}"
-                spark.udf.register(impl, _make_encode_udf(kind, et, n, "auto"))
-                # SQL-UDF wrapper: NULL array -> NULL, NULL element ->
-                # error (reference src/lindel_extension.cpp:684-694),
-                # raised in SQL before the batch reaches Python.
                 total = encode_output_bits(et.bits, n)
-                ret = encode_output_spark_type(total, "auto").simpleString()
+                ret_type = encode_output_spark_type(total, "auto")
+                _register(spark, impl, "Encode",
+                          (kind, et.bits, n, _encode_output_mode(ret_type)),
+                          ret_type)
+                ret = ret_type.simpleString()
                 arr_t = f"array<{et.spark_type.simpleString()}>"
                 curve_desc = ("Hilbert curve index" if kind == "hilbert"
                               else "Morton (Z-order) index")
@@ -622,13 +445,7 @@ def register(spark: SparkSession, elems=("int8", "int16", "int32", "int64",
                     CREATE OR REPLACE TEMPORARY FUNCTION {name}(arr {arr_t})
                     RETURNS {ret}
                     COMMENT '{comment}'
-                    RETURN CASE
-                      WHEN arr IS NULL THEN NULL
-                      WHEN size(arr) != {n} THEN
-                        raise_error('LINDEL: expected array of length {n}')
-                      WHEN exists(arr, x -> x IS NULL) THEN
-                        raise_error('{_NULL_ELEM_MSG}')
-                      ELSE {impl}(arr) END
+                    RETURN {impl}(arr)
                 """)
                 names.append(name)
         for width in (8, 16, 32, 64, 128):
@@ -641,12 +458,12 @@ def register(spark: SparkSession, elems=("int8", "int16", "int32", "int64",
                         continue
                     name = f"{kind}_decode_{width}_{n}{suffix}"
                     impl = f"__lindel_impl_{name}"
-                    spark.udf.register(
-                        impl, _make_decode_udf(kind, plan, width == 128)
-                    )
+                    _register(spark, impl, "Decode",
+                              (kind, plan.elem_bits, n,
+                               _decode_output_mode(plan)),
+                              _decode_type(plan))
                     in_t = "binary" if width == 128 else "bigint"
-                    ret_t = T.ArrayType(
-                        plan.spark_elem, False).simpleString()
+                    ret_t = _decode_type(plan).simpleString()
                     flavor = {"": "signed", "_u": "unsigned",
                               "_f": "float"}[suffix]
                     comment = (

@@ -153,6 +153,34 @@ def _read_parquet_parts(paths) -> "pa.Table":
     return pa.concat_tables(tables)
 
 
+_GLOB_SPECIAL = set("\\*?[]{},")
+
+
+def read_parquet_files(reader, files: Sequence[str]) -> DataFrame:
+    """``reader.parquet(*files)`` that lists its input on the driver.
+
+    Spark lists more than ``parallelPartitionDiscovery.threshold`` (32)
+    root paths with a Spark job of one task per path, before the scan.
+    So the files are read through their parent directories, filtered by
+    a ``pathGlobFilter`` alternation of their names: one directory per
+    Spark write layout (a store's ``base-v{N}`` and ``tail``) is one
+    root path whatever the file count.  Spark names files
+    ``part-<task>-<write uuid>``, so within one dataset a name rarely
+    recurs; where it does (a partitioned write puts one name in each
+    partition directory a task wrote), the namesake is read too.
+    Callers filter with the exact predicate, so that costs pruning,
+    never rows.
+    """
+    dirs, names = {}, {}
+    for f in files:
+        d, name = f.rsplit("/", 1)
+        dirs[d] = None
+        names["".join("\\" + ch if ch in _GLOB_SPECIAL else ch
+                      for ch in name)] = None
+    return (reader.option("pathGlobFilter", "{" + ",".join(names) + "}")
+            .parquet(*dirs))
+
+
 def parquet_layout_report(spark, path: str) -> DataFrame:
     """Physical-layout audit of a parquet directory: one row per data
     file with (file, bytes, n_rows, n_row_groups) read from the
@@ -535,7 +563,7 @@ def manifest_pruned_read(spark, path: str, manifest,
     if not keep:
         df = spark.read.parquet(path).filter(residual).limit(0)
         return df, stats
-    return spark.read.parquet(*keep).filter(residual), stats
+    return read_parquet_files(spark.read, keep).filter(residual), stats
 
 
 # ---------------------------------------------------------------------------
@@ -739,7 +767,7 @@ def bloom_pruned_read(spark, path: str, manifest, col: str, value,
     if not keep:
         return (spark.read.parquet(path).filter(residual).limit(0),
                 stats)
-    return spark.read.parquet(*keep).filter(residual), stats
+    return read_parquet_files(spark.read, keep).filter(residual), stats
 
 
 def column_entropy_profile(

@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from lindel_spark import jvm
+
 
 def get_spark(app_name: str = "lindel-spark",
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -27,6 +29,9 @@ def get_spark(app_name: str = "lindel-spark",
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # the curve functions' JVM kernels (lindel_spark/Curves.java),
+        # compiled on first use in a checkout
+        .config("spark.jars", jvm.jar_path())
     )
     # Harness-only knob, applied ONLY when the harness sets it: the
     # value-level oracle sweeps collect full query results (at the

@@ -24,7 +24,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-import numpy as np
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
@@ -50,16 +49,15 @@ class ElemType:
     bits: int
     is_float: bool
     spark_type: T.DataType
-    np_dtype: np.dtype
 
 
 _ELEM_TYPES = {
-    "int8": ElemType("int8", 8, False, T.ByteType(), np.dtype(np.int8)),
-    "int16": ElemType("int16", 16, False, T.ShortType(), np.dtype(np.int16)),
-    "int32": ElemType("int32", 32, False, T.IntegerType(), np.dtype(np.int32)),
-    "int64": ElemType("int64", 64, False, T.LongType(), np.dtype(np.int64)),
-    "float32": ElemType("float32", 32, True, T.FloatType(), np.dtype(np.float32)),
-    "float64": ElemType("float64", 64, True, T.DoubleType(), np.dtype(np.float64)),
+    "int8": ElemType("int8", 8, False, T.ByteType()),
+    "int16": ElemType("int16", 16, False, T.ShortType()),
+    "int32": ElemType("int32", 32, False, T.IntegerType()),
+    "int64": ElemType("int64", 64, False, T.LongType()),
+    "float32": ElemType("float32", 32, True, T.FloatType()),
+    "float64": ElemType("float64", 64, True, T.DoubleType()),
 }
 
 _SPARK_TO_ELEM = {
@@ -165,8 +163,6 @@ _SIGNED_SPARK = {8: T.ByteType(), 16: T.ShortType(), 32: T.IntegerType(),
 # unsigned values need headroom in Spark's signed types (SURVEY §7.4)
 _UNSIGNED_SPARK = {8: T.ShortType(), 16: T.IntegerType(), 32: T.LongType(),
                    64: T.DecimalType(20, 0)}
-_SIGNED_NP = {8: np.dtype(np.int8), 16: np.dtype(np.int16),
-              32: np.dtype(np.int32), 64: np.dtype(np.int64)}
 
 
 @dataclass(frozen=True)
@@ -223,7 +219,3 @@ def resolve_decode(input_width: int, nparts: int, want_float: bool,
         )
     spark = (_UNSIGNED_SPARK if want_unsigned else _SIGNED_SPARK)[elem_bits]
     return DecodePlan(input_width, nparts, elem_bits, False, want_unsigned, spark)
-
-
-def signed_np_dtype(bits: int) -> np.dtype:
-    return _SIGNED_NP[bits]

@@ -34,10 +34,10 @@ def zorder_key(cols: Sequence, elem: str | None = "int32",
     """The sort-key Column for a z-order/hilbert clustering of ``cols``.
 
     Picks the cheapest bit-identical implementation: the pure-Column
-    (whole-stage codegen) Morton path when legal, else the
-    Arrow-vectorized encode UDF.  For 128-bit keys the key is
-    big-endian binary, whose lexicographic order equals unsigned
-    numeric order, so range partitioning still clusters correctly.
+    (whole-stage codegen) Morton path when legal, else the JVM encode
+    UDF.  For 128-bit keys the key is big-endian binary, whose
+    lexicographic order equals unsigned numeric order, so range
+    partitioning still clusters correctly.
     ``elem=None`` + ``df=`` infers the element type from the schema.
     """
     from lindel_spark.functions import _resolve_elem
@@ -52,42 +52,6 @@ def zorder_key(cols: Sequence, elem: str | None = "int32",
     if curve != "hilbert":
         raise ValueError(f"LINDEL: unknown curve {curve!r}")
     return hilbert_encode(list(cols), elem, output="auto")
-
-
-def _prepare_zorder_frame(
-    df: DataFrame,
-    cols: Sequence,
-    elem,
-    curve: str,
-    num_files: int | None,
-    partition_by: Sequence[str] | None,
-    persist_key: bool,
-) -> tuple[DataFrame, DataFrame]:
-    """(keyed, ranged+sorted) frames behind :func:`zorder_write`.
-
-    Split out so tests can assert the physical plan: with
-    ``persist_key`` the range shuffle must read ``InMemoryTableScan``
-    (one curve-key evaluation total), not re-run the encode UDF for
-    the range sampler.
-    """
-    from pyspark import StorageLevel
-
-    key = zorder_key(cols, elem, curve, df=df)
-    keyed = df.withColumn(_KEY, key)
-    if persist_key:
-        # Deserialized level: the cache exists only for the duration of
-        # one write (sampler job fills it, shuffle job drains it), so
-        # paying columnar compression for it is pure overhead.
-        keyed = keyed.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-    range_cols = (
-        [F.col(c) for c in partition_by] if partition_by else []
-    ) + [F.col(_KEY)]
-    if num_files is not None:
-        ranged = keyed.repartitionByRange(num_files, *range_cols)
-    else:
-        ranged = keyed.repartitionByRange(*range_cols)
-    out = ranged.sortWithinPartitions(*range_cols).drop(_KEY)
-    return keyed, out
 
 
 def compact_parquet(
@@ -146,7 +110,6 @@ def zorder_write(
     mode: str = "overwrite",
     format: str = "parquet",
     partition_by: Sequence[str] | None = None,
-    persist_key: bool = False,
     **writer_options,
 ) -> None:
     """Write ``df`` clustered along a space-filling curve over ``cols``.
@@ -169,32 +132,27 @@ def zorder_write(
     predicates get partition pruning AND row-group skipping.
 
     ``repartitionByRange`` derives its bounds by *sampling the child
-    plan*, which evaluates the (UDF-computed) curve key twice — once
-    for the range sampler, once for the shuffle.  ``persist_key=True``
-    caches the keyed frame instead, so the sampling job fills the
-    cache and the shuffle reads it: one encode pass total, at the cost
-    of materializing the full input on executor-local storage.  The
-    default is ``False`` — measured at sf0.1 (round-15), the columnar
-    cache FILL alone costs more than the second vectorized encode
-    pass over a parquet scan (2.6 s fill vs 0.9 s/pass; whole write
-    3.4 s vs 2.2 s), and at 100 TB the double scan of columnar input
-    beats spilling the entire dataset to executor disks.  Set
-    ``persist_key=True`` when the input itself is expensive to
-    recompute (a non-reusable upstream shuffle/UDF chain) or storage
-    outruns scan bandwidth.
+    plan*, so the curve key is evaluated twice: once for the range
+    sampler, once for the shuffle.  That is cheaper than caching the
+    keyed input: with the JVM kernel, bench.py's ``zorder_write_i32x2``
+    (sf0.1, 4 cores) took 2.3 s re-evaluating the key and 3.7 s with
+    the keyed frame persisted between the two jobs.
     """
-    keyed, out = _prepare_zorder_frame(
-        df, cols, elem, curve, num_files, partition_by, persist_key)
+    keyed = df.withColumn(_KEY, zorder_key(cols, elem, curve, df=df))
+    range_cols = (
+        [F.col(c) for c in partition_by] if partition_by else []
+    ) + [F.col(_KEY)]
+    if num_files is not None:
+        ranged = keyed.repartitionByRange(num_files, *range_cols)
+    else:
+        ranged = keyed.repartitionByRange(*range_cols)
+    out = ranged.sortWithinPartitions(*range_cols).drop(_KEY)
     writer = out.write.mode(mode).format(format)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     for k, v in writer_options.items():
         writer = writer.option(k, v)
-    try:
-        writer.save(path)
-    finally:
-        if persist_key:
-            keyed.unpersist()
+    writer.save(path)
 
 
 def merge_upsert(
@@ -658,7 +616,8 @@ def _zstore_pruned_read(spark, path: str, ranges: dict,
     from lindel_spark import fs as _fs
     from lindel_spark.profile import (_read_parquet_parts,
                                       _strip_file_scheme,
-                                      minmax_survivor_stats)
+                                      minmax_survivor_stats,
+                                      read_parquet_files)
 
     v, meta, schema = current
     base_dir = _fs.join(path, f"base-v{v}")
@@ -696,7 +655,8 @@ def _zstore_pruned_read(spark, path: str, ranges: dict,
     stats["tail_files_scanned"] = len(tail_scan)
 
     files = scan + tail_scan
-    out = (spark.read.schema(schema).parquet(*files).filter(residual)
+    out = (read_parquet_files(spark.read.schema(schema), files)
+           .filter(residual)
            if files else spark.createDataFrame([], schema))
     # tombstones are always applied on current-timeline reads
     return _zstore_apply_deletes(spark, path, out), stats

@@ -170,6 +170,43 @@ def test_zorder_store_select_prunes_base_files(spark, tmp_path_factory,
     assert none.count() == 0 and none.schema == hits.schema
 
 
+def test_pruned_reads_above_listing_threshold_run_no_job(
+        spark, tmp_path_factory, traced):
+    """More survivors than Spark's parallel-listing threshold (32
+    paths): the files are listed on the driver through their
+    directories, so building a store read still runs no Spark job, a
+    manifest-pruned read runs no more jobs than with one survivor, and
+    both return the plain filter's rows."""
+    from lindel_spark import profile as LP
+
+    li = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet"))
+    cols = [F.col("l_orderkey").cast("int"),
+            F.col("l_partkey").cast("int")]
+    store = str(tmp_path_factory.mktemp("zwide") / "s")
+    LW.zorder_store_init(li, cols, store, stat_cols=["l_orderkey"],
+                         elem="int32", num_files=40)
+    ranges = {"l_orderkey": (1, None)}
+    want = li.filter("l_orderkey >= 1")
+    key = ["l_orderkey", "l_linenumber"]
+
+    (hits, stats), n_jobs, _ = traced(
+        lambda: LW.zorder_store_select(spark, store, ranges))
+    assert stats["files_scanned"] == 40 and n_jobs == 0
+    assert hits.select(key).exceptAll(want.select(key)).count() == 0
+    assert hits.count() == want.count()
+
+    base = FS.join(store, "base-v0")
+    manifest = LP.file_minmax_manifest(spark, base, ["l_orderkey"]).collect()
+    (df, stats), n_jobs, _ = traced(
+        lambda: LP.manifest_pruned_read(spark, base, manifest, ranges))
+    # Parquet schema inference runs its one job at any file count
+    (_, one), n_jobs_one, _ = traced(lambda: LP.manifest_pruned_read(
+        spark, base, manifest, {"l_orderkey": (1, 1)}))
+    assert stats["files_scanned"] == 40 and one["files_scanned"] <= 32
+    assert n_jobs == n_jobs_one <= 1
+    assert df.count() == want.count()
+
+
 def test_zorder_store_append_incremental_stats(spark, tmp_path_factory):
     """Append writes stats for exactly the NEW tail files, and select
     prunes tail files through them: two disjoint-range appends, a

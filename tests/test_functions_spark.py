@@ -259,8 +259,9 @@ def test_sql_registration(spark):
 
 
 def test_udf_construction_emits_no_warning(spark):
-    """Every Arrow UDF is built from type hints: Spark warns at each
-    construction that names an explicit arrow UDF type instead."""
+    """Building a curve Column (a JVM UDF) or dedup's Arrow UDF emits
+    no warning: Arrow UDFs are built from type hints, since Spark warns
+    at each construction that names an explicit arrow UDF type."""
     import warnings
 
     from lindel_spark.dedup import simhash_fast

@@ -50,6 +50,22 @@ def test_native_morton_is_pure_codegen(li):
     assert "codegen id" in p
 
 
+def test_curve_functions_run_in_the_jvm(li):
+    """One execution path per direction: all four curve functions run
+    as JVM UDFs, with no Python UDF node in the plan."""
+    xy = [F.col("l_orderkey").cast("int"), F.col("l_partkey").cast("int")]
+    h = LF.hilbert_encode(xy, "int32")
+    m = LF.morton_encode(xy, "int32")
+    p = plan_of(li.select(
+        h.alias("h"), m.alias("m"),
+        LF.hilbert_decode(h, 2, input_width=64).alias("hd"),
+        LF.morton_decode(m, 2, input_width=64).alias("md")))
+    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+    for name in ("hilbert_encode(", "morton_encode(", "hilbert_decode(",
+                 "morton_decode("):
+        assert name in p, name
+
+
 def test_encode_udf_prunes_scan_columns(li):
     """Only the two key columns may reach the parquet scan."""
     df = li.select(LF.hilbert_encode(
@@ -127,22 +143,6 @@ def test_asof_join_single_window_no_join_explosion(spark):
     assert "Window" in p
     assert "CartesianProduct" not in p
     assert "SortMergeJoin" not in p and "BroadcastHashJoin" not in p
-
-
-def test_zorder_write_single_encode_pass(li):
-    """The range shuffle must read the cached keyed frame, not re-run
-    the encode UDF for the range sampler (write.py persist_key)."""
-    from lindel_spark.write import _prepare_zorder_frame
-
-    keyed, out = _prepare_zorder_frame(
-        li, [F.col("l_orderkey").cast("int"), F.col("l_partkey").cast("int")],
-        "int32", "hilbert", 8, None, True)
-    try:
-        p = plan_of(out)
-        assert "InMemoryTableScan" in p or "TableCacheQueryStage" in p
-        assert "rangepartitioning" in p.lower()
-    finally:
-        keyed.unpersist()
 
 
 def test_spatial_join_codegen_compiles(spark):
