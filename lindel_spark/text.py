@@ -93,10 +93,6 @@ def stopword_hits(c: Column, stopwords) -> Column:
     ).cast("long")
 
 
-def stopword_ratio(c: Column, stopwords) -> Column:
-    return stopword_hits(c, stopwords).cast("double") / token_count(c).cast("double")
-
-
 def language_id(c: Column, lang_stopwords: dict[str, tuple[str, ...]] | None = None) -> Column:
     """Deterministic stopword-hit argmax over candidate languages;
     ties break to the lexicographically first language code. Returns

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 _SIZE_SUFFIX = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30,
                 "t": 1 << 40}
@@ -106,14 +107,13 @@ def ensure_parallelism(df: DataFrame, factor: int = 1,
 
 
 def global_rank(df: DataFrame, order_cols, out_col: str = "rank",
-                num_partitions: int | None = None,
-                method: str = "boundaries") -> DataFrame:
+                num_partitions: int | None = None) -> DataFrame:
     """1-based global rank of every row under a TOTAL order over
     ``order_cols`` — WITHOUT the single-task ``Window.orderBy``
     anti-pattern (an unpartitioned window funnels the entire dataset
     through one task; at 100 TB that is not slow, it is impossible).
 
-    Default plan (``method="boundaries"``, round 9): determinism comes
+    Plan (round 9): determinism comes
     from EXPLICIT partition boundaries, not from materializing the
     frame. A content-deterministic md5 sample of ~``P x 20`` order
     tuples (selected by row CONTENT, so it is identical across
@@ -137,25 +137,17 @@ def global_rank(df: DataFrame, order_cols, out_col: str = "rank",
     Boundary quality only affects BALANCE, never correctness: pid is
     monotone in Spark's own struct ordering whatever tuples were
     picked, and the exact residual order within a pid partition comes
-    from the window's sort. ``method="checkpoint"`` keeps the round-8
-    materialization path as a fallback (e.g. for inputs whose scan is
-    expensive enough that one materialization beats two scans).
+    from the window's sort.
 
     ``order_cols`` must be a total order (no ties): append a unique id
     as the last column — with ties, rank among tied rows would be
     ambiguous however it is computed.
     """
-    from pyspark.sql import functions as F
+    from pyspark.sql import Window
 
     if isinstance(order_cols, str):
         order_cols = [order_cols]
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    if method == "checkpoint":
-        return _global_rank_checkpoint(df, cols, out_col,
-                                       num_partitions)
-    if method != "boundaries":
-        raise ValueError(f"LINDEL: unknown global_rank method {method!r}")
-    from pyspark.sql import Window
 
     spark = df.sparkSession
     P = num_partitions or int(
@@ -218,60 +210,6 @@ def global_rank(df: DataFrame, order_cols, out_col: str = "rank",
     )
 
 
-def _global_rank_checkpoint(df: DataFrame, cols, out_col: str,
-                            num_partitions: int | None) -> DataFrame:
-    """Round-8 fallback: one range-partitioning shuffle materialized
-    EAGERLY via ``localCheckpoint`` so the counts job and the map-only
-    enumeration read the SAME placement (repartitionByRange samples
-    boundaries per execution — without the pin, offsets from one
-    execution applied to another's enumeration silently corrupt ranks;
-    caught by the round-8 sf1 value sweep). Costs a full materialize
-    of the frame to executor-local storage; prefer the default
-    explicit-boundary method unless the input scan is the dearer
-    resource."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    if num_partitions is not None:
-        ranged = df.repartitionByRange(num_partitions, *cols)
-    else:
-        ranged = df.repartitionByRange(*cols)
-    ranged = ranged.sortWithinPartitions(*cols).withColumn(
-        "__gr_pid", F.spark_partition_id())
-    # one materialization for BOTH downstream jobs — see docstring
-    ranged = ranged.localCheckpoint(eager=True)
-    schema = T.StructType(
-        list(ranged.schema.fields)
-        + [T.StructField("__gr_local", T.LongType())])
-
-    def enumerate_partition(batches):
-        i = 0
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["__gr_local"] = range(i, i + len(pdf))
-            i += len(pdf)
-            yield pdf
-
-    local = ranged.mapInPandas(enumerate_partition, schema)
-    counts = sorted(
-        (r["__gr_pid"], r["cnt"])
-        for r in ranged.groupBy("__gr_pid")
-        .agg(F.count(F.lit(1)).alias("cnt")).collect())
-    offsets, acc = [], 0
-    for pid, n in counts:
-        offsets.append((pid, acc))
-        acc += n
-    spark = df.sparkSession
-    off_df = F.broadcast(local_frame(
-        spark, offsets or [(0, 0)], "__gr_pid int, __gr_off long"))
-    return (
-        local.join(off_df, "__gr_pid")
-        .withColumn(out_col,
-                    (F.col("__gr_off") + F.col("__gr_local") + 1))
-        .drop("__gr_pid", "__gr_local", "__gr_off")
-    )
-
-
 def prefix_sums(df: DataFrame, order_col: str, cols,
                 num_partitions: int | None = None) -> DataFrame:
     """Running (inclusive) cumulative sums of ``cols`` under the total
@@ -279,8 +217,7 @@ def prefix_sums(df: DataFrame, order_col: str, cols,
     window: range-partition on the order column, PIN placement with a
     localCheckpoint (repartitionByRange re-samples boundaries per
     execution, so without the pin the per-partition totals job and
-    the enumeration job could disagree — the ``global_rank``
-    checkpoint-method contract), then per-partition totals (the one
+    the enumeration job could disagree), then per-partition totals (the one
     bounded driver collect, P rows) offset a partitioned window.
 
     Intended for AGGREGATED frames (distinct order keys, e.g. a
@@ -291,7 +228,6 @@ def prefix_sums(df: DataFrame, order_col: str, cols,
     cumulative would be placement-dependent.
     """
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     cols = [cols] if isinstance(cols, str) else list(cols)
     spark = df.sparkSession
@@ -343,7 +279,6 @@ def prefix_mins(df: DataFrame, order_col: str, cols,
     duplicate-free ``order_col`` contract as :func:`prefix_sums`.
     """
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     cols = [cols] if isinstance(cols, str) else list(cols)
     spark = df.sparkSession
@@ -378,3 +313,82 @@ def prefix_mins(df: DataFrame, order_col: str, cols,
             f"cummin_{x}", F.least(F.col(f"__off_{x}"),
                                    F.min(x).over(w)))
     return out.drop("__pid", *[f"__off_{x}" for x in cols])
+
+
+def iterate(state: DataFrame, step, rounds: int, until=None,
+            every: int = 1) -> DataFrame:
+    """The one loop behind every iterative operator (the walks, peels
+    and frontiers of :mod:`lindel_spark.graph`,
+    :func:`lindel_spark.clustering.kmeans_lloyd`): runs ``state =
+    step(state, r)`` for ``r = 1 … rounds`` and returns the last
+    state.
+
+    After every round but the last the state is
+    ``localCheckpoint``-ed (eager, executor-local blocks): each round
+    plans over a one-round-deep lineage, and a state the next round
+    reads twice (a frontier filter and a union arm, a score and its
+    normalizer) is read back, not recomputed. The last round stays
+    lazy, so the result is a lazy frame. Every round (round 16, under
+    AQE): AQE re-optimizes the remaining plan at each stage boundary,
+    so driver planning grows superlinearly with the depth of an
+    uncheckpointed tail — 5 PageRank iterations on the 25-node
+    transition graph took 21 s with no checkpoint, 6.4 s
+    checkpointing every 4th round and 2.2 s every round; textrank
+    10.6 s against 4.6 s. The materialization is the state frame
+    only (node-sized for the graph walks, k rows for k-means).
+
+    ``every`` is internal: a call site that measured faster passes a
+    literal, with its measurement. The state is then persisted
+    (``MEMORY_AND_DISK``) after each round, the last included, and
+    checkpointed only after every ``every``-th, which frees the
+    states persisted before it. A persisted plan is the same on the
+    next call over the same input, so a repeated call reads the cache
+    instead of recomputing the rounds; a checkpoint never matches.
+
+    ``until(state) -> bool`` is the optional fixed-point exit, called
+    on the initial state and after every round but the last; when it
+    returns True the loop stops and returns that state.
+
+    Eager jobs while the result is built: the checkpoints, each one
+    Spark action that runs one round's plan (one job per query stage
+    under AQE), plus whatever ``until`` runs. No other driver action.
+    """
+    from pyspark import StorageLevel
+
+    pending: list[DataFrame] = []
+    for r in range(1, rounds + 1):
+        if until is not None and until(state):
+            break
+        state = step(state, r)
+        if r % every == 0 and r < rounds:
+            state = state.localCheckpoint()
+            for p in pending:
+                p.unpersist(False)
+            pending = []
+        elif every > 1:
+            state = state.persist(StorageLevel.MEMORY_AND_DISK)
+            pending.append(state)
+    return state
+
+
+def exact_sum(c: str):
+    """Sum of a double column whose partial sums stay below 1e8 (the
+    graph scores: PageRank contributions and dangling totals, HITS
+    hub and authority sums), independent of summation order: each
+    value is cast to decimal(38,30) and decimal addition is
+    associative, so every partition layout and shuffle arrival order
+    gives the same bits. The 1e-30 quantum sits below a double's ulp
+    for any value above ~5e-15; a sum at or above 1e8 overflows (an
+    error under ANSI mode, NULL without it)."""
+    return F.sum(F.col(c).cast("decimal(38,30)")).cast("double")
+
+
+def sorted_sum(c: str):
+    """Sum of a double column of any range (edge weights), independent
+    of layout: the values are sorted before a sequential fold, so every
+    layout adds them in one order. Integer-valued weights (counts) give
+    the plain sum exactly. Collects each group's values into one
+    array, so use it where groups are small or the sum runs once per
+    graph, not per iteration."""
+    return F.aggregate(F.sort_array(F.collect_list(c)), F.lit(0.0),
+                       lambda acc, x: acc + x)

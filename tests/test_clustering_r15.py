@@ -81,18 +81,6 @@ def test_kmeans_validates(spark):
         kmeans_lloyd(df, k=2, rounds=0)
 
 
-def test_kmeans_checkpoint_parity(spark):
-    # crossing checkpoint_every must not change the fixed point
-    df = _blobs(spark)
-    a = sorted((r.id, r.cluster) for r in
-               kmeans_lloyd(df, k=2, rounds=6,
-                            checkpoint_every=2).collect())
-    b = sorted((r.id, r.cluster) for r in
-               kmeans_lloyd(df, k=2, rounds=6,
-                            checkpoint_every=10).collect())
-    assert a == b
-
-
 def test_kmeans_plan_shape(spark, sf_dir):
     # corpus never shuffles for assignment (broadcast centroid
     # frame); no corpus self-join (vec rides the argmin struct); no

@@ -88,6 +88,39 @@ def test_pagerank_ranks_bit_identical_across_layouts(spark):
     assert one == five
 
 
+def test_hits_rows_bit_identical_across_layouts(spark):
+    """HITS keeps the pagerank contract: the first authority pass sums
+    exact in-degree counts (duplicate edges counted), every later sum
+    is decimal, so one, five and seven input partitions give the same
+    bits."""
+    import random
+
+    from lindel_spark.graph import hits
+
+    rnd = random.Random(3)
+    E = [(rnd.randrange(12), rnd.randrange(12)) for _ in range(50)]
+    E += E[:6]  # duplicate edges are signal in HITS
+    edges = spark.createDataFrame(E, "src long, dst long")
+    one, five, seven = (sorted(hits(edges.repartition(k),
+                                    iterations=5).collect())
+                        for k in (1, 5, 7))
+    assert len(one) == 12
+    assert one == five == seven
+
+
+def test_pagerank_build_runs_count_plus_checkpoints(spark, actions):
+    """Building pagerank runs the node count and one checkpoint per
+    iteration but the last (``util.iterate``), no other action; the
+    last iteration stays lazy."""
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a")],
+        "src string, dst string")
+    _, n5 = actions(lambda: pagerank(edges, iterations=5))
+    assert n5 == 1 + 4
+    _, n1 = actions(lambda: pagerank(edges, iterations=1))
+    assert n1 == 1
+
+
 def test_pagerank_validates_iterations(spark):
     edges = spark.createDataFrame([("a", "b")], "src string, dst string")
     with pytest.raises(ValueError, match="iterations"):
@@ -119,6 +152,41 @@ def test_connected_components_chain_diameter(spark):
 # round 11: alternating large-star/small-star CC (Kiveris et al. 2014)
 # ---------------------------------------------------------------------------
 
+def _minlabel_components(edges, nodes=None, max_iter=15):
+    """Test-side reference for ``connected_components``: min-label
+    propagation — per round every vertex takes the min of its own and
+    its neighbors' labels, until a round changes no label (rounds =
+    graph diameter)."""
+    e = edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
+    if nodes is None:
+        nodes = (e.select(F.col("s").alias("node"))
+                 .unionByName(e.select(F.col("d").alias("node")))
+                 .distinct())
+    sym = e.union(
+        e.select(F.col("d").alias("s"), F.col("s").alias("d"))
+    ).localCheckpoint()
+    labels = nodes.select(
+        F.col("node").alias("id"), F.col("node").alias("label")
+    ).localCheckpoint()
+    prev_sum = labels.agg(F.sum("label")).first()[0]
+    for _ in range(max_iter):
+        nbr = (sym.join(labels, sym["d"] == labels["id"])
+               .groupBy("s").agg(F.min("label").alias("nl")))
+        labels = (
+            labels.join(nbr, labels["id"] == nbr["s"], "left")
+            .select(labels["id"],
+                    F.least(labels["label"],
+                            F.coalesce(F.col("nl"), labels["label"]))
+                    .alias("label"))
+            .localCheckpoint())
+        cur_sum = labels.agg(F.sum("label")).first()[0]
+        if cur_sum == prev_sum:
+            break
+        prev_sum = cur_sum
+    return labels.select(
+        F.col("id").alias("node"), F.col("label").alias("component"))
+
+
 def test_cc_star_path_graph_logarithmic_rounds(spark):
     """A 1000-node path graph (diameter 999) must converge in O(log n)
     star rounds — the whole point of the alternating algorithm (the
@@ -134,9 +202,9 @@ def test_cc_star_path_graph_logarithmic_rounds(spark):
 
 
 def test_cc_star_equals_minlabel_random_graph(spark):
-    """Star and min-label engines agree node-for-node on a
-    multi-component random graph (self-loops, duplicate edges,
-    isolates via nodes=)."""
+    """The star engine agrees node-for-node with the min-label
+    reference on a multi-component random graph (self-loops,
+    duplicate edges, isolates via nodes=)."""
     import random
 
     from lindel_spark.graph import connected_components
@@ -147,16 +215,16 @@ def test_cc_star_equals_minlabel_random_graph(spark):
     nodes = spark.createDataFrame(
         [(i,) for i in range(320)], "node long")  # 300..319 isolated-ish
     a = {(r.node, r.component) for r in connected_components(
-        edges, nodes=nodes, method="star").collect()}
-    b = {(r.node, r.component) for r in connected_components(
-        edges, nodes=nodes, method="minlabel", max_iter=60).collect()}
+        edges, nodes=nodes).collect()}
+    b = {(r.node, r.component) for r in _minlabel_components(
+        edges, nodes=nodes, max_iter=60).collect()}
     assert a == b
 
 
 def test_cc_star_equals_minlabel_on_dedup_family_pairs(spark):
     """The verdict-5 pin: every dedup family's pair output clusters
-    identically under both CC engines (star is dup_clusters' engine
-    now — this is the no-regression contract)."""
+    identically under the star engine (dup_clusters' engine) and the
+    min-label reference — the no-regression contract."""
     from lindel_spark import dedup as LD
     from lindel_spark import similarity as LS
     from lindel_spark import text as LT
@@ -177,17 +245,10 @@ def test_cc_star_equals_minlabel_on_dedup_family_pairs(spark):
     }
     for name, pairs in fams.items():
         a = {(r.node, r.component) for r in connected_components(
-            pairs, method="star").collect()}
-        b = {(r.node, r.component) for r in connected_components(
-            pairs, method="minlabel").collect()}
+            pairs).collect()}
+        b = {(r.node, r.component) for r in _minlabel_components(
+            pairs).collect()}
         assert a == b, f"{name}: star != minlabel"
-
-
-def test_cc_rejects_unknown_method(spark):
-    from lindel_spark.graph import connected_components
-    edges = spark.createDataFrame([(1, 2)], "src long, dst long")
-    with pytest.raises(ValueError, match="method"):
-        connected_components(edges, method="bogus")
 
 
 def test_triangle_count_known_graph(spark):

@@ -79,14 +79,6 @@ def test_sssp_improvement_after_first_reach(spark):
     assert _dists(sssp_distances(e, s, rounds=2))[3] == 2.0
 
 
-def test_sssp_checkpoint_rounds_match_unchecked(spark):
-    e = _edges(spark, [(i, i + 1, float(i % 3 + 1)) for i in range(1, 9)])
-    s = _srcs(spark, [1])
-    a = _dists(sssp_distances(e, s, rounds=6, checkpoint_every=2))
-    b = _dists(sssp_distances(e, s, rounds=6, checkpoint_every=100))
-    assert a == b
-
-
 def test_sssp_rounds_validation(spark):
     e = _edges(spark, [(1, 2, 1.0)])
     with pytest.raises(ValueError):

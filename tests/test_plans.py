@@ -492,22 +492,6 @@ def test_round8_operators_never_cartesian_or_global_window(spark, docs):
     assert "windowspecdefinition(__gr_pid" in p
 
 
-def test_global_rank_checkpoint_fallback_plan(spark, docs):
-    """The round-8 checkpoint path stays available behind
-    method='checkpoint': lazy plan reads the materialized RDD, no
-    Window at all, no range repartition downstream."""
-    from lindel_spark.util import global_rank
-
-    p = plan_of(global_rank(docs.select("doc_id"), ["doc_id"],
-                            method="checkpoint"))
-    lp = p.lower()
-    assert "Window" not in p
-    assert "existingrdd" in lp or "scan existing" in lp
-    assert "broadcasthashjoin" in lp
-    assert lp.count("exchange") <= 2
-    assert "rangepartitioning" not in lp
-
-
 def test_substring_dedup_plan_never_cartesian(spark, docs):
     """Round-10 duplicated-span removal: gram-keyed equi-joins only —
     no cartesian, no broadcast nested loop anywhere in the plan."""

@@ -393,8 +393,7 @@ def test_sorted_neighborhood_pairs_values(spark):
 def test_global_rank_stable_across_executions_and_methods(spark):
     """Round-9: ranks must be IDENTICAL across repeated executions
     (the r8 sf1 bug was offsets from one execution applied to
-    another's enumeration) and across both implementations — the
-    explicit-boundary default and the checkpoint fallback."""
+    another's enumeration) and across input partitionings."""
     from lindel_spark.util import global_rank
 
     df = spark.range(20000).select(
@@ -407,10 +406,7 @@ def test_global_rank_stable_across_executions_and_methods(spark):
     b = {r.id: r.rnk
          for r in global_rank(df.repartition(7), ["key", "id"],
                               "rnk").collect()}
-    c = {r.id: r.rnk
-         for r in global_rank(df, ["key", "id"], "rnk",
-                              method="checkpoint").collect()}
-    assert a == b == c
+    assert a == b
     assert sorted(a.values()) == list(range(1, 20001))
 
 
