@@ -12,8 +12,11 @@ executor like the reference's per-row Rust FFI calls
 (src/lindel_extension.cpp:708,735,771): no batch leaves the JVM.  Both
 encode call forms (an array column, a list of scalar columns) and the
 SQL names from :func:`register` feed the same encode UDF one
-``array<elem>`` column.  :mod:`lindel_spark.curve` is the NumPy
-reference the tests hold these kernels to, bit for bit.
+``array<elem>`` column.  Each curve Column is built by one py4j call to
+a factory in ``Curves.java``, which applies the casts and ``array()``
+in the JVM and reuses one UDF instance per configuration.
+:mod:`lindel_spark.curve` is the NumPy reference the tests hold these
+kernels to, bit for bit.
 
 Morton (both directions) additionally has a pure-Column "native" path
 for integer inputs with total width <= 64 bits: staged magic-number
@@ -23,12 +26,12 @@ with no UDF call and no boxing.
 NULL semantics (reference src/lindel_extension.cpp:684-694, 437-441):
 NULL array/input -> NULL result; NULL *element* inside an array ->
 error "Lindel functions cannot handle arrays containing NULL values".
+The list-of-columns form maps a NULL in any input column to a NULL key;
+that rule is a flag of its encode UDF, not a Column guard.
 """
 
 from __future__ import annotations
 
-import operator
-from functools import reduce
 from typing import Sequence
 
 from pyspark.sql import Column, SparkSession
@@ -49,27 +52,13 @@ from lindel_spark.types import (
 # the JVM UDFs (lindel_spark/Curves.java)
 # ---------------------------------------------------------------------------
 
-def _register(spark: SparkSession, name: str, cls: str, args: tuple,
-              ret_type: T.DataType) -> None:
-    """Register ``lindel.Curves.<cls>(*args)`` as SQL function ``name``
-    in ``spark``, through the Java ``UDF1`` overload of
-    ``udf().register``."""
-    js = spark._jsparkSession
-    udf = getattr(jvm.curves(spark), cls)(*args)
-    js.udf().register(name, udf, js.parseDataType(ret_type.json()))
-
-
-def _call(cls: str, args: tuple, ret_type: T.DataType, col: Column) -> Column:
-    """``col`` through the JVM UDF ``lindel.Curves.<cls>(*args)``.
-
-    The Column carries the UDF itself, not a registered name, so it
-    resolves in whichever session runs it: a ``foreachBatch`` batch,
-    for one, belongs to a session of its own.
-    """
-    curves = jvm.curves(SparkSession.active())
-    udf = getattr(curves, cls)(*args)
-    name = f"{args[0]}_{cls.lower()}"  # hilbert_encode, ... in plans
-    return Column(curves.column(udf, ret_type.json(), name, col._jc))
+def _jcol(c):
+    """A column name as itself, a Column as its JVM Column."""
+    if isinstance(c, Column):
+        return c._jc
+    if isinstance(c, str):
+        return c
+    raise TypeError(f"LINDEL: expected a column name or Column, got {c!r}")
 
 
 def _encode_output_mode(ret_type: T.DataType) -> str:
@@ -136,27 +125,26 @@ def _resolve_elem(arr, elem, df):
 
 def _encode(kind: str, arr, elem, n, output):
     """Both call forms become one ``array<elem>`` column for the one
-    encode UDF.  The Spark cast to ``elem`` runs first, so an
-    out-of-range input raises ``CAST_OVERFLOW`` (ANSI) instead of
-    wrapping in the kernel."""
+    encode UDF, built by one call to ``Curves.encode``.  The Spark cast
+    to ``elem`` runs first, so an out-of-range input raises
+    ``CAST_OVERFLOW`` (ANSI) instead of wrapping in the kernel.  The
+    list form's NULL rule is the UDF's: a NULL element gives a NULL
+    key there, where the array form raises."""
     et = elem_type(elem)
     if isinstance(arr, (list, tuple)):
-        cols = [c if isinstance(c, Column) else F.col(c) for c in arr]
-        n = len(cols)
-        any_null = reduce(operator.or_, [c.isNull() for c in cols])
-        arg = F.when(any_null, F.lit(None)).otherwise(
-            F.array(*[c.cast(et.spark_type) for c in cols]))
+        n = len(arr)
+        arg = [_jcol(c) for c in arr]
     else:
         if n is None:
             raise ValueError(
                 "LINDEL: pass n= (array length) when encoding an array "
                 "column; Spark arrays carry no bind-time length (SURVEY §7.4)"
             )
-        col = arr if isinstance(arr, Column) else F.col(arr)
-        arg = col.cast(T.ArrayType(et.spark_type))
+        arg = _jcol(arr)
     ret_type = encode_output_spark_type(encode_output_bits(et.bits, n), output)
-    return _call("Encode", (kind, et.bits, n, _encode_output_mode(ret_type)),
-                 ret_type, arg)
+    return Column(jvm.curves().encode(
+        kind, et.bits, n, _encode_output_mode(ret_type), ret_type.json(),
+        et.spark_type.simpleString(), arg))
 
 
 def hilbert_encode(arr, elem: str | None = "int32", n: int | None = None,
@@ -198,7 +186,12 @@ def morton_encode(arr, elem: str | None = "int32", n: int | None = None,
     Note: for integer inputs with total width <= 64,
     :func:`morton_encode_native` builds the same key from Spark's own
     bit operators, compiled into the stage by whole-stage codegen with
-    no UDF call and no boxing of the inputs.
+    no UDF call and no boxing of the inputs.  It stays the cheaper
+    path: on 4M int32 pairs (``scripts/curve_cost_probe.py``,
+    ``local[4]``) it costs ~10–30 ns per row per core above the
+    scan, this UDF ~85–120 ns, most of it the UDF boundary.  As with
+    :func:`hilbert_encode`, the list form gives a NULL key where any
+    input is NULL, and the array form raises on a NULL element.
     """
     return _encode("morton", arr, _resolve_elem(arr, elem, df), n, output)
 
@@ -209,7 +202,6 @@ def morton_encode(arr, elem: str | None = "int32", n: int | None = None,
 
 def _decode(kind: str, col, nparts: int, want_float: bool, want_unsigned: bool,
             input_width: int | None, binary_input: bool | None):
-    col = col if isinstance(col, Column) else F.col(col)
     if input_width is None:
         # The reference derives the width from the input's unsigned type
         # (src/lindel_extension.cpp:983-1001); Spark carries every width
@@ -223,10 +215,10 @@ def _decode(kind: str, col, nparts: int, want_float: bool, want_unsigned: bool,
     plan = resolve_decode(input_width, nparts, want_float, want_unsigned)
     if binary_input is None:
         binary_input = input_width == 128
-    carrier = T.BinaryType() if binary_input else T.LongType()
-    return _call("Decode", (kind, plan.elem_bits, nparts,
-                            _decode_output_mode(plan)),
-                 _decode_type(plan), col.cast(carrier))
+    return Column(jvm.curves().decode(
+        kind, plan.elem_bits, nparts, _decode_output_mode(plan),
+        _decode_type(plan).json(), "binary" if binary_input else "bigint",
+        _jcol(col)))
 
 
 def hilbert_decode(col, nparts: int, want_float: bool = False,
@@ -418,6 +410,8 @@ def register(spark: SparkSession, elems=("int8", "int16", "int32", "int64",
     Reference registration surface: src/lindel_extension.cpp:948-1026
     (docs metadata → Python docstrings; telemetry deliberately omitted).
     """
+    js = spark._jsparkSession
+    udfs = jvm.curves(spark)
     names = []
     for kind in ("hilbert", "morton"):
         for e in elems:
@@ -428,9 +422,9 @@ def register(spark: SparkSession, elems=("int8", "int16", "int32", "int64",
                 impl = f"__lindel_impl_{name}"
                 total = encode_output_bits(et.bits, n)
                 ret_type = encode_output_spark_type(total, "auto")
-                _register(spark, impl, "Encode",
-                          (kind, et.bits, n, _encode_output_mode(ret_type)),
-                          ret_type)
+                js.udf().register(impl, udfs.udf(
+                    "encode", kind, et.bits, n, _encode_output_mode(ret_type),
+                    False, ret_type.json()))
                 ret = ret_type.simpleString()
                 arr_t = f"array<{et.spark_type.simpleString()}>"
                 curve_desc = ("Hilbert curve index" if kind == "hilbert"
@@ -458,10 +452,10 @@ def register(spark: SparkSession, elems=("int8", "int16", "int32", "int64",
                         continue
                     name = f"{kind}_decode_{width}_{n}{suffix}"
                     impl = f"__lindel_impl_{name}"
-                    _register(spark, impl, "Decode",
-                              (kind, plan.elem_bits, n,
-                               _decode_output_mode(plan)),
-                              _decode_type(plan))
+                    js.udf().register(impl, udfs.udf(
+                        "decode", kind, plan.elem_bits, n,
+                        _decode_output_mode(plan), False,
+                        _decode_type(plan).json()))
                     in_t = "binary" if width == 128 else "bigint"
                     ret_t = _decode_type(plan).simpleString()
                     flavor = {"": "signed", "_u": "unsigned",

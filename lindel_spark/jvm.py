@@ -21,8 +21,10 @@ from pathlib import Path
 
 SOURCE = Path(__file__).with_name("Curves.java")
 CACHE = Path(__file__).with_name(".jvm-cache")
-# compile-time class path: UDF1, Column, DataType; scala.collection.Seq
-_CLASSPATH = ("spark-sql-api_*.jar", "scala-library-*.jar")
+# compile-time class path: UDF1, Column, functions, DataType; Column's
+# supertype Logging; scala.collection.Seq
+_CLASSPATH = ("spark-sql-api_*.jar", "spark-common-utils_*.jar",
+              "scala-library-*.jar")
 
 
 def jar_path() -> str:
@@ -78,24 +80,49 @@ def _build(jar: Path) -> None:
         os.replace(part, jar)
 
 
+# (gateway client, lindel.Curves instance) of the last JVM looked up
+_found = None
+
+
 def _lookup(jvm):
-    """``lindel.Curves`` as visible to this thread's JVM class loader."""
+    """A ``lindel.Curves`` instance in ``jvm``, or None if its class is
+    not visible to this thread's JVM class loader.
+
+    Cached per gateway: py4j calls the static factories through the
+    instance, which skips the by-name class lookups (a round trip each)
+    that ``jvm.lindel.Curves`` and every call on a ``JavaClass`` pay.
+    """
     from py4j.java_gateway import JavaClass
 
-    found = jvm.lindel.Curves
-    return found if isinstance(found, JavaClass) else None
+    global _found
+    client = jvm._gateway_client
+    if _found is not None and _found[0] is client:
+        return _found[1]
+    cls = jvm.lindel.Curves
+    if not isinstance(cls, JavaClass):
+        return None
+    _found = (client, cls())
+    return _found[1]
 
 
-def curves(spark):
-    """The ``lindel.Curves`` class in ``spark``'s JVM.
+def curves(spark=None):
+    """The ``lindel.Curves`` factories in the JVM of ``spark``, or of
+    the active SparkContext when ``spark`` is None.
 
-    A JVM started by :func:`lindel_spark.session.get_spark` has it on
-    its class path.  Otherwise the jar is added with ``ADD JAR``, which
-    also ships it to executors; there is no other execution path to
-    fall back to, so a JVM that still cannot see the class is an error.
+    A JVM started by :func:`lindel_spark.session.get_spark` has the
+    class on its class path.  Otherwise the jar is added with ``ADD
+    JAR``, which also ships it to executors; there is no other
+    execution path to fall back to, so a JVM that still cannot see the
+    class is an error.
     """
-    found = _lookup(spark._jvm)
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
+    if spark is None and SparkContext._active_spark_context is None:
+        spark = SparkSession.active()  # raises: no session to run in
+    found = _lookup((spark or SparkContext._active_spark_context)._jvm)
     if found is None:
+        spark = spark or SparkSession.active()
         spark.sql(f"ADD JAR '{jar_path()}'")
         found = _lookup(spark._jvm)
     if found is None:
@@ -104,4 +131,3 @@ def curves(spark):
             "session (ADD JAR did not expose lindel.Curves); start the "
             "session with lindel_spark.session.get_spark()")
     return found
-

@@ -35,8 +35,11 @@ def zorder_key(cols: Sequence, elem: str | None = "int32",
 
     Picks the cheapest bit-identical implementation: the pure-Column
     (whole-stage codegen) Morton path when legal, else the JVM encode
-    UDF.  For 128-bit keys the key is big-endian binary, whose
-    lexicographic order equals unsigned numeric order, so range
+    UDF.  On 4M int32 pairs (``scripts/curve_cost_probe.py``,
+    ``local[4]``) the codegen Morton key costs ~10–30 ns per row per
+    core above the scan, the JVM Morton UDF ~85–120 ns and the JVM
+    Hilbert key ~145–165 ns.  For 128-bit keys the key is big-endian
+    binary, whose lexicographic order equals unsigned numeric order, so range
     partitioning still clusters correctly.
     ``elem=None`` + ``df=`` infers the element type from the schema.
     """
