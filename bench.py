@@ -516,8 +516,7 @@ def main(only: set[str] | None = None, fast: bool = False) -> None:
         LW.zorder_write(li, [F.col("l_orderkey").cast("int"),
                              F.col("l_partkey").cast("int")],
                         _mstore, elem="int32", num_files=32)
-        _manifest = LP.file_minmax_manifest(
-            spark, _mstore, ["l_orderkey"]).collect()
+        _manifest = LP.file_minmax_manifest(spark, _mstore, ["l_orderkey"])
         _mhits, _mstats = LP.manifest_pruned_read(
             spark, _mstore, _manifest, {"l_orderkey": (_mlo, _mhi)})
 

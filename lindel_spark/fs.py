@@ -87,10 +87,13 @@ def read_text(spark, path: str) -> str:
         stream.close()
 
 
-def commit_new(spark, path: str, text: str = "") -> None:
-    """Commit a small APPEND-ONLY file: write a PER-WRITER tmp file
+def commit_new(spark, path: str, data: str | bytes = "") -> None:
+    """Commit a small APPEND-ONLY file holding ``data`` (``str`` is
+    written as UTF-8; ``bytes`` as they are, e.g. a serialized Parquet
+    manifest part): write a PER-WRITER tmp file
     (``<path>.<uuid>.tmp`` — two racers never share a staging name, so
-    one can never publish the other's payload), then rename to
+    one can never publish the other's payload, and a ``.parquet``
+    lister never sees a torn part), then rename to
     ``path``, which must NOT already exist. Because the destination
     name is fresh, nothing committed is ever rewritten or deleted —
     there is no delete-before-rename window (see module docstring).
@@ -116,7 +119,8 @@ def commit_new(spark, path: str, text: str = "") -> None:
         f"{path}.{uuid.uuid4().hex}.tmp")
     out = fs.create(tmp, True)
     try:
-        out.write(bytearray(text, "utf-8"))
+        out.write(bytearray(data, "utf-8") if isinstance(data, str)
+                  else bytearray(data))
     finally:
         out.close()
     if fs.exists(p):

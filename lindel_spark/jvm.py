@@ -3,10 +3,11 @@
 The jar is compiled on first use with the host's ``javac`` (JDK 17+)
 against two of Spark's own jars, and cached beside the source under a
 name keyed by a hash of it: only the first session in a checkout pays
-the compile (~1.5 s), and an edited source builds a new jar.  Nothing is
-downloaded.  :func:`lindel_spark.session.get_spark` starts the JVM with
-the jar on ``spark.jars``; a session started any other way gets it
-through ``ADD JAR`` on first use.
+the compile (~1.5 s), and an edited source builds a new jar, which
+replaces the old one in the cache.  Nothing is downloaded.
+:func:`lindel_spark.session.get_spark` starts the JVM with the jar on
+``spark.jars``; a session started any other way gets it through ``ADD
+JAR`` on first use.
 """
 
 from __future__ import annotations
@@ -78,6 +79,10 @@ def _build(jar: Path) -> None:
             for f in sorted(classes.rglob("*.class")):
                 z.write(f, f.relative_to(classes).as_posix())
         os.replace(part, jar)
+    # the cache keeps one jar: the current source's
+    for stale in CACHE.glob("lindel-curves-*.jar"):
+        if stale != jar:
+            stale.unlink(missing_ok=True)
 
 
 # (gateway client, lindel.Curves instance) of the last JVM looked up

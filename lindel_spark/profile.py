@@ -373,15 +373,12 @@ def referential_integrity_report(
 # file-level min/max manifest index: build once, prune scans forever
 # ---------------------------------------------------------------------------
 
-# file-count bound for the driver-side footer fast path (overridable
-# for cluster profiles via SPARK_GRAFT_MANIFEST_DRIVER_FILES; footers
-# are O(KB) metadata reads, so the bound caps driver work, not data)
-MANIFEST_DRIVER_FILES = int(os.environ.get(
-    "SPARK_GRAFT_MANIFEST_DRIVER_FILES", "64"))
+# file-count bound for the driver-side footer reads: footers are O(KB)
+# metadata reads, so the bound caps driver work, not data
+MANIFEST_DRIVER_FILES = 64
 
 
-def file_minmax_manifest(spark, path: str, cols,
-                         files=None) -> DataFrame:
+def file_minmax_manifest(spark, path: str, cols, files=None) -> "pa.Table":
     """Per-file (min, max, n_rows) manifest for ``cols`` over a parquet
     dataset, read from FOOTERS only — the poor-man's table-format
     statistics index (what Delta/Iceberg keep in their metadata logs).
@@ -393,14 +390,19 @@ def file_minmax_manifest(spark, path: str, cols,
     whole files from the task list, upstream of (and compounding with)
     parquet row-group skipping.
 
-    Distributed metadata job: the file list parallelizes across
-    executors; each opens only footers. Column min/max is the min/max
-    over the file's row-group statistics. Pass ``files`` to build
-    stats for an explicit subset (e.g. the files one append just
+    Returns a pyarrow Table on the driver, one row per file: ``file``,
+    ``n_rows`` and a ``min_<c>``/``max_<c>`` double pair per column
+    (the min/max over the file's row-group statistics, padded 1 ulp
+    outward; NULL when a row group has no statistics). Up to
+    ``MANIFEST_DRIVER_FILES`` files the driver reads the footers
+    itself, with no Spark job; above it the file list fans out to a
+    distributed footer job whose rows are collected. Pass ``files`` to
+    build stats for an explicit subset (e.g. the files one append just
     wrote — the incremental path of a persisted store manifest)
     instead of listing ``path``.
     """
-    from pyspark.sql import types as T
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     from lindel_spark import fs as _fs
 
@@ -414,15 +416,13 @@ def file_minmax_manifest(spark, path: str, cols,
         for f in files
         if not f.rsplit("/", 1)[-1].startswith(("_", "."))
     )
-    fields = [T.StructField("file", T.StringType()),
-              T.StructField("n_rows", T.LongType())]
-    for c in cols:
-        fields += [T.StructField(f"min_{c}", T.DoubleType()),
-                   T.StructField(f"max_{c}", T.DoubleType())]
-    out_schema = T.StructType(fields)
+    schema = pa.schema(
+        [("file", pa.string()), ("n_rows", pa.int64())]
+        + [(f"{b}_{c}", pa.float64()) for c in cols for b in ("min", "max")])
 
     def footer_rec(f):
         import math
+        from fractions import Fraction
 
         md = _open_footer(f)[0].metadata
         names = {md.schema.column(i).name: i
@@ -431,12 +431,23 @@ def file_minmax_manifest(spark, path: str, cols,
         for c in cols:
             lo, hi = None, None
             ci = names[c]
+            # pyarrow cannot convert an int-backed decimal's statistics,
+            # so a decimal's are read raw (an int, or big-endian two's
+            # complement bytes) and scaled exactly
+            dec = md.schema.column(ci)
+            scale = dec.scale if dec.logical_type.type == "DECIMAL" else None
             for g in range(md.num_row_groups):
                 st = md.row_group(g).column(ci).statistics
                 if st is None or not st.has_min_max:
                     lo, hi = None, None
                     break
-                mn, mx = float(st.min), float(st.max)
+                if scale is None:
+                    mn, mx = float(st.min), float(st.max)
+                else:
+                    mn, mx = (float(Fraction(
+                        int.from_bytes(r, "big", signed=True)
+                        if isinstance(r, bytes) else r, 10 ** scale))
+                        for r in (st.min_raw, st.max_raw))
                 lo = mn if lo is None else min(lo, mn)
                 hi = mx if hi is None else max(hi, mx)
             if lo is not None:
@@ -456,52 +467,39 @@ def file_minmax_manifest(spark, path: str, cols,
     # call at 8 files). Above the bound the job fans out across
     # executors exactly as before; identical rows either way.
     if len(files) <= MANIFEST_DRIVER_FILES:
-        import pandas as pd
-
-        # via pandas/Arrow: a python-LIST createDataFrame builds a
-        # 32-slice pickled RDD whose every downstream task round-trips
-        # a Python worker (measured 5–8 s to WRITE 8 rows); the Arrow
-        # path is one batch (~0.2 s). None → null exactly (verified;
-        # parquet never emits NaN min/max stats — no-stats is None)
-        pdf = pd.DataFrame([footer_rec(f) for f in files],
-                           columns=[fld.name for fld in fields])
-        return spark.createDataFrame(pdf, out_schema)
+        return pa.Table.from_pylist([footer_rec(f) for f in files],
+                                    schema=schema)
 
     fdf = local_frame(spark, [(f,) for f in files], "file string") \
-        .repartition(min(len(files), 64) or 1)
+        .repartition(min(len(files), 64))
 
     def read_stats(batches):
         import pandas as pd
 
         for b in batches:
-            rows = [footer_rec(f) for f in b["file"]]
-            yield pd.DataFrame(rows, columns=[f.name for f in fields])
+            yield pd.DataFrame([footer_rec(f) for f in b["file"]],
+                               columns=schema.names)
 
-    return fdf.mapInPandas(read_stats, out_schema)
+    return (fdf.mapInPandas(read_stats, from_arrow_schema(schema))
+            .toArrow().cast(schema))
 
 
-def minmax_survivor_stats(man, ranges: dict,
+def minmax_survivor_stats(man: "pa.Table", ranges: dict,
                           prunable=None) -> tuple[int, list]:
     """(files_total, sorted surviving file paths) of a stats manifest:
     files whose [min, max] can intersect every predicate range. A NULL
     stat — or a column outside ``prunable`` / missing from the
     manifest — never prunes.
 
-    ``man`` is a pyarrow Table or a list of Row/dict already on the
-    driver (a store's persisted manifest, as table formats keep their
-    transaction log: no Spark job), or a manifest DataFrame, collected
-    ONCE — so an un-persisted footer-sweep plan never executes twice
-    (round-9 ADVICE). The pruning itself is NumPy on the driver: a
-    manifest is one row per file, and a million-row manifest prunes
-    in well under a second."""
+    ``man`` is the manifest as a pyarrow Table on the driver
+    (:func:`file_minmax_manifest`, or a store's persisted parts read
+    back, as table formats keep their transaction log), so pruning
+    runs no Spark job. It is NumPy on the driver: a manifest is one row
+    per file, and a million-row manifest prunes in well under a
+    second."""
     import numpy as np
     import pyarrow as pa
 
-    if isinstance(man, DataFrame):
-        man = man.toArrow()
-    elif not isinstance(man, pa.Table):
-        man = pa.Table.from_pylist(
-            [r if isinstance(r, dict) else r.asDict() for r in man])
     cols = set(man.column_names)
     keep = np.ones(man.num_rows, bool)
     for c, (lo, hi) in ranges.items():
@@ -552,10 +550,9 @@ def manifest_pruned_read(spark, path: str, manifest,
     being tight (a file with NULL stats is conservatively scanned);
     the residual filter re-applies the predicate row-level either way.
 
-    ``manifest`` is the DataFrame from :func:`file_minmax_manifest`
-    (executed once) or its collected rows (list of Row/dict — the
-    zero-Spark-jobs hot path when the caller already holds the
-    metadata); :func:`minmax_survivor_stats` prunes either form.
+    ``manifest`` is the pyarrow Table from :func:`file_minmax_manifest`;
+    :func:`minmax_survivor_stats` prunes it on the driver, so no Spark
+    job runs for the pruning.
     """
     residual = range_residual(ranges)
     total, keep = minmax_survivor_stats(manifest, ranges)

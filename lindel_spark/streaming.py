@@ -432,17 +432,12 @@ def sliding_rollup(
 
 def _agg_store_last_applied(spark, store_path: str) -> int | None:
     """Highest committed batch id of an :func:`incremental_agg_sink`
-    store — max over the append-only ``_commits/v{N}`` log (legacy
-    mutable ``_LATEST`` marker honored as a fallback)."""
+    store — max over the append-only ``_commits/v{N}`` log, or None
+    when no batch is committed."""
     from lindel_spark import fs as _fs
 
     vs = _fs.committed_versions(spark, _fs.join(store_path, "_commits"))
-    if vs:
-        return vs[-1]
-    marker = _fs.join(store_path, "_LATEST")
-    if _fs.exists(spark, marker):
-        return int(_fs.read_text(spark, marker).strip().split(":")[0])
-    return None
+    return vs[-1] if vs else None
 
 
 def read_agg_store(spark, store_path: str) -> DataFrame | None:

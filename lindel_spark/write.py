@@ -291,27 +291,19 @@ def _zstore_commit(spark, path: str, v: int) -> None:
 
 def _zstore_latest(spark, path: str) -> int | None:
     """Current base version: max of the append-only commit log
-    (``_commits/v{N}``). Falls back to a legacy mutable ``_LATEST``
-    marker for stores written before round 9's version log."""
+    (``_commits/v{N}``), or None when no version is committed."""
     from lindel_spark import fs as _fs
 
     vs = _fs.committed_versions(spark, _zstore_commits(path))
-    if vs:
-        return vs[-1]
-    m = _fs.join(path, "_LATEST")
-    if _fs.exists(spark, m):
-        return int(_fs.read_text(spark, m).strip())
-    return None
+    return vs[-1] if vs else None
 
 
 def _zstore_current(spark, path: str) -> tuple[int, dict, "StructType"]:
     """(latest version, ``_META`` record, read schema), read once per
-    store op. ``_META`` is committed once at init; defaults fill a
-    legacy store's ``stat_cols`` (min/max-indexed columns) and
-    ``bloom_cols`` (columns whose Parquet files carry bloom filters),
-    and keys of the retired md5 bloom index are ignored. The schema
-    is the one recorded at init, so no read re-infers it from footers;
-    a legacy store without one infers it from its current base."""
+    store op. ``_META`` is committed once at init, before the first
+    version: ``stat_cols`` (min/max-indexed columns), ``bloom_cols``
+    (columns whose Parquet files carry bloom filters) and the schema a
+    read of the base returns, so no read re-infers it from footers."""
     import json
 
     from pyspark.sql.types import StructType
@@ -321,15 +313,8 @@ def _zstore_current(spark, path: str) -> tuple[int, dict, "StructType"]:
     v = _zstore_latest(spark, path)
     if v is None:
         raise FileNotFoundError(f"LINDEL: no zorder store at {path}")
-    meta = _fs.join(path, "_META")
-    rec = {}
-    if _fs.exists(spark, meta):
-        rec = json.loads(_fs.read_text(spark, meta))
-    rec.setdefault("stat_cols", [])
-    rec.setdefault("bloom_cols", [])
-    return v, rec, (
-        StructType.fromJson(rec["schema"]) if "schema" in rec
-        else spark.read.parquet(_fs.join(path, f"base-v{v}")).schema)
+    rec = json.loads(_fs.read_text(spark, _fs.join(path, "_META")))
+    return v, rec, StructType.fromJson(rec["schema"])
 
 
 # Bloom filters are Parquet's own split-block filters, sized from the
@@ -353,25 +338,30 @@ def _bloom_options(bloom_cols) -> dict:
 
 def _write_manifest(spark, data_dir: str, manifest_dir: str,
                     stat_cols, files=None) -> None:
-    """Build the per-file min/max stats parquet for ``data_dir`` (or an
-    explicit ``files`` subset) and write it to ``manifest_dir`` — the
-    distributed footer job runs ONCE per written version, so reads
-    never re-pay it (round-8 verdict's weak component)."""
-    from lindel_spark import fs as _fs
-    from lindel_spark.profile import MANIFEST_DRIVER_FILES, file_minmax_manifest
+    """Build the per-file min/max manifest of ``data_dir`` (or of an
+    explicit ``files`` subset) and commit it to ``manifest_dir`` as one
+    ``part-<uuid>.parquet``, serialized on the driver and published by
+    :func:`lindel_spark.fs.commit_new` (tmp file, then rename), so a
+    reader never lists a torn part. Footers are read ONCE per written
+    version, so reads never re-pay them. A base version's manifest
+    (``files`` None) first clears ``manifest_dir`` of a crashed
+    maintainer's leftovers."""
+    import uuid
 
-    listed = files if files is not None else _fs.list_files(spark, data_dir)
-    man = file_minmax_manifest(spark, data_dir, stat_cols, files=listed)
-    # small manifest: one file (driver-built local frame, coalesce is
-    # free). Large manifest: keep the footer job's ≤64-way parallelism
-    # — a coalesce(1) here funneled the whole distributed footer sweep
-    # into ONE task (round-15; the parts are still metadata-sized and
-    # readers list the directory either way)
-    if len(listed) <= MANIFEST_DRIVER_FILES:
-        man = man.coalesce(1)
-    man.write.mode(
-        "append" if files is not None else "overwrite"
-    ).parquet(manifest_dir)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lindel_spark import fs as _fs
+    from lindel_spark.profile import file_minmax_manifest
+
+    man = file_minmax_manifest(spark, data_dir, stat_cols, files=files)
+    if files is None:
+        _fs.delete(spark, manifest_dir, recursive=True)
+    buf = pa.BufferOutputStream()
+    pq.write_table(man, buf)
+    _fs.commit_new(spark,
+                   _fs.join(manifest_dir, f"part-{uuid.uuid4().hex}.parquet"),
+                   buf.getvalue().to_pybytes())
 
 
 def zorder_store_init(df: DataFrame, cols: Sequence, path: str,
@@ -399,12 +389,15 @@ def zorder_store_init(df: DataFrame, cols: Sequence, path: str,
     complement: min/max prunes RANGE predicates on clustered columns,
     a bloom filter lets the Parquet reader drop row groups for an
     EQUALITY probe on ANY column, clustered or not
-    (:func:`zorder_store_lookup`). The manifest is built by ONE
-    footer job per written base version — :func:`zorder_store_select`
-    then reads the stored manifest instead of sweeping footers per
-    query, which is the whole point of a stats index at 10^5-10^6
-    files. ``_META`` also records the schema a read of the base
-    returns, so reads never re-infer it.
+    (:func:`zorder_store_lookup`). The manifest's footers are read
+    ONCE per written base version (on the driver up to
+    ``profile.MANIFEST_DRIVER_FILES`` files, by one distributed footer
+    job above) and the manifest is committed as one Parquet part
+    through :func:`lindel_spark.fs.commit_new` —
+    :func:`zorder_store_select` then reads the stored manifest instead
+    of sweeping footers per query, which is the whole point of a stats
+    index at 10^5-10^6 files. ``_META`` also records the schema a read
+    of the base returns, so reads never re-infer it.
 
     Versioned directories + an append-only commit log, never in-place
     rewrites — the object-store-safe pattern (no atomic directory
@@ -542,10 +535,9 @@ def zorder_store_maintain(spark, path: str, cols: Sequence,
     :func:`zorder_store_init`) rather than corrupting the store.
 
     The new base is written with the store's bloom filters, and its
-    manifest is rebuilt by one footer job over the files the rewrite
-    just produced and committed alongside it — reads keep paying zero
-    footer I/O. Directories of the retired md5 bloom index
-    (``bloom-v{N}``) on a legacy store are pruned with the old bases.
+    manifest is rebuilt from the footers of the files the rewrite just
+    produced and committed alongside it — reads keep paying zero
+    footer I/O.
 
     Returns stats: ``{"rewritten": bool, "base_bytes": int,
     "tail_bytes": int}``.
@@ -591,8 +583,7 @@ def zorder_store_maintain(spark, path: str, cols: Sequence,
     _zstore_commit(spark, path, v + 1)
     # retain the immediately-previous base for time travel; prune older
     for d in _fs.list_names(spark, path):
-        if ((d.startswith("base-v") or d.startswith("manifest-v")
-             or d.startswith("bloom-v"))
+        if (d.startswith(("base-v", "manifest-v"))
                 and int(d.rsplit("-v", 1)[1]) < v):
             _fs.delete(spark, _fs.join(path, d), recursive=True)
     for f in tail_files + mtail_parts:
@@ -793,8 +784,7 @@ def zorder_store_vacuum(spark, path: str,
                         keep_versions: int = 2) -> dict:
     """Retention vacuum for the incremental z-order store: keep the
     newest ``keep_versions`` committed base versions (with their
-    manifests), physically delete everything older — including a
-    legacy store's ``bloom-v{N}`` md5 bloom-index directories.
+    manifests), physically delete everything older.
     :func:`zorder_store_maintain` hard-codes a keep-2 prune for time
     travel; vacuum makes retention a policy — and
     ``keep_versions=1`` is the GDPR COMPLETION step: after a
@@ -822,18 +812,18 @@ def zorder_store_vacuum(spark, path: str,
     deleted: list[str] = []
     kept: list[str] = []
     for d in _fs.list_names(spark, path):
-        for pref in ("base-v", "manifest-v", "bloom-v"):
-            if d.startswith(pref):
-                try:
-                    dv = int(d.rsplit("-v", 1)[1])
-                except ValueError:
-                    continue
-                if dv > v:
-                    continue  # in-flight maintainer's uncommitted work
-                if dv < cutoff:
-                    _fs.delete(spark, _fs.join(path, d), recursive=True)
-                    deleted.append(d)
-                else:
-                    kept.append(d)
+        if not d.startswith(("base-v", "manifest-v")):
+            continue
+        try:
+            dv = int(d.rsplit("-v", 1)[1])
+        except ValueError:
+            continue
+        if dv > v:
+            continue  # in-flight maintainer's uncommitted work
+        if dv < cutoff:
+            _fs.delete(spark, _fs.join(path, d), recursive=True)
+            deleted.append(d)
+        else:
+            kept.append(d)
     return {"latest": v, "kept": sorted(kept),
             "deleted": sorted(deleted)}

@@ -283,51 +283,6 @@ def test_zorder_store_append_checks_schema(spark, tmp_path_factory):
         LW.zorder_store_init(li, cols, store + "2", bloom_m_bits=1 << 10)
 
 
-def test_zorder_store_legacy_layout(spark, tmp_path_factory):
-    """A store in the earlier layout — ``_META`` without a schema but
-    with the md5 bloom geometry keys, and a ``bloom-v0`` bitset dir —
-    still reads exactly (schema inferred, base without native bloom
-    filters scanned), and maintain + vacuum(keep_versions=1) clear its
-    ``bloom-v*`` dirs."""
-    import json
-
-    from lindel_spark import profile as LP
-
-    li = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet"))
-    cols = [F.col("l_orderkey").cast("int"),
-            F.col("l_partkey").cast("int")]
-    store = str(tmp_path_factory.mktemp("zlegacy") / "s")
-    opts = {"elem": "int32", "num_files": 4}
-    LW.zorder_write(li.filter("l_orderkey % 5 != 0"), cols,
-                    os.path.join(store, "base-v0"), **opts)
-    LW._write_manifest(spark, os.path.join(store, "base-v0"),
-                       os.path.join(store, "manifest-v0"), ["l_orderkey"])
-    LP.file_bloom_manifest(spark, os.path.join(store, "base-v0"),
-                           "l_orderkey", m_bits=1 << 10) \
-        .withColumn("col", F.lit("l_orderkey")) \
-        .write.parquet(os.path.join(store, "bloom-v0"))
-    with open(os.path.join(store, "_META"), "w") as fh:
-        json.dump({"stat_cols": ["l_orderkey"],
-                   "bloom_cols": ["l_orderkey"],
-                   "bloom_m_bits": 1 << 10, "bloom_k": 7}, fh)
-    LW._zstore_commit(spark, store, 0)
-    LW.zorder_store_append(li.filter("l_orderkey % 5 = 0"), store)
-
-    hits, _ = LW.zorder_store_select(spark, store,
-                                     {"l_orderkey": (1000, 2000)})
-    assert hits.count() == li.filter(
-        "l_orderkey between 1000 and 2000").count()
-    probe = int(li.selectExpr("min(l_orderkey)").first()[0]) + 999
-    hits, _ = LW.zorder_store_lookup(spark, store, "l_orderkey", probe)
-    assert hits.count() == li.filter(F.col("l_orderkey") == probe).count()
-
-    assert LW.zorder_store_maintain(spark, store, cols, tail_ratio=0.01,
-                                    **opts)["rewritten"]
-    LW.zorder_store_vacuum(spark, store, keep_versions=1)
-    assert [d for d in os.listdir(store) if d.startswith("bloom-v")] == []
-    assert LW.zorder_store_read(spark, store).count() == li.count()
-
-
 def test_zorder_store_select_survives_drained_manifest_tail(
         spark, tmp_path_factory):
     """Round-9 ADVICE regression: after maintain drains manifest-tail

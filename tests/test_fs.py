@@ -196,7 +196,7 @@ def test_pruned_reads_above_listing_threshold_run_no_job(
     assert hits.count() == want.count()
 
     base = FS.join(store, "base-v0")
-    manifest = LP.file_minmax_manifest(spark, base, ["l_orderkey"]).collect()
+    manifest = LP.file_minmax_manifest(spark, base, ["l_orderkey"])
     (df, stats), n_jobs, _ = traced(
         lambda: LP.manifest_pruned_read(spark, base, manifest, ranges))
     # Parquet schema inference runs its one job at any file count
@@ -266,6 +266,61 @@ def test_zorder_store_maintain_rebuilds_manifest(spark,
         spark, store, {"l_orderkey": (0, 500)})
     assert hits.count() == li.filter("l_orderkey <= 500").count()
     assert stats["files_scanned"] < stats["files_total"]
+
+
+def test_zorder_store_manifests_commit_through_fs(spark, tmp_path_factory,
+                                                 traced):
+    """Manifests are built on the driver and committed through
+    ``fs.commit_new``, so they cost no Spark job: an append of an
+    already-read frame runs only its data write's job, and a maintain
+    runs only its rewrite's. The manifest dirs hold only ``.parquet``
+    parts, never a ``.tmp`` leftover, and a stale part planted in
+    ``manifest-v{N+1}`` (a crashed maintainer's) is cleared: the new
+    base's manifest holds exactly its files, and select returns the
+    plain filter's rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lindel_spark import profile as LP
+
+    li = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet"))
+    cols = [F.col("l_orderkey").cast("int"),
+            F.col("l_partkey").cast("int")]
+    store = str(tmp_path_factory.mktemp("zcommit") / "s")
+    opts = {"elem": "int32", "num_files": 4}
+    LW.zorder_store_init(li.filter("l_orderkey % 3 != 0"), cols, store,
+                         stat_cols=["l_orderkey"], **opts)
+    _, n_append, _ = traced(lambda: LW.zorder_store_append(
+        li.filter("l_orderkey % 3 = 0"), store))
+    assert n_append == 1  # the data write; the manifest runs none
+
+    def parts(d):
+        return [n for n in os.listdir(os.path.join(store, d))
+                if not n.startswith(".")]
+
+    for d in ("manifest-v0", "manifest-tail"):
+        assert parts(d) and all(n.endswith(".parquet") for n in parts(d))
+    bogus = pa.table({"file": ["/nowhere/part-x.parquet"], "n_rows": [1],
+                      "min_l_orderkey": [-2.0], "max_l_orderkey": [-1.0]})
+    os.makedirs(os.path.join(store, "manifest-v1"))
+    pq.write_table(bogus, os.path.join(store, "manifest-v1",
+                                       "part-bogus.parquet"))
+    st, n_maintain, _ = traced(lambda: LW.zorder_store_maintain(
+        spark, store, cols, tail_ratio=0.01, **opts))
+    # the rewrite's own jobs only; the manifest runs none
+    assert st["rewritten"] and n_maintain == 3
+    assert len(parts("manifest-v1")) == 1
+    assert parts("manifest-v1")[0].endswith(".parquet")
+    assert parts("manifest-tail") == []
+    man = pq.read_table(os.path.join(store, "manifest-v1"))
+    base = [LP._strip_file_scheme(f)
+            for f in FS.list_files(spark, FS.join(store, "base-v1"))]
+    assert sorted(man.column("file").to_pylist()) == sorted(base)
+    hits, _ = LW.zorder_store_select(spark, store, {"l_orderkey": (1, 500)})
+    want = li.filter("l_orderkey between 1 and 500")
+    key = ["l_orderkey", "l_linenumber"]
+    assert hits.count() == want.count()
+    assert hits.select(key).exceptAll(want.select(key)).count() == 0
 
 
 def test_commit_new_unique_tmp_and_duplicate_refusal(spark,

@@ -18,9 +18,10 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_cold_build_from_empty_cache(tmp_path, monkeypatch):
-    """From an empty cache, ``jar_path`` compiles the source and
-    publishes only the finished jar; javac is waited on, and a second
-    call reuses the jar without compiling."""
+    """From a cache holding only a stale jar (an earlier source's),
+    ``jar_path`` compiles the source, publishes only the finished jar
+    and removes the stale one; javac is waited on, and a second call
+    reuses the jar without compiling."""
     started = []
 
     class Recorded(subprocess.Popen):
@@ -30,7 +31,11 @@ def test_cold_build_from_empty_cache(tmp_path, monkeypatch):
 
     monkeypatch.setattr(jvm, "CACHE", tmp_path / "cache")
     monkeypatch.setattr(subprocess, "Popen", Recorded)
+    (tmp_path / "cache").mkdir()
+    stale = tmp_path / "cache" / "lindel-curves-0000000000000000.jar"
+    stale.write_bytes(b"stale")
     jar = jvm.jar_path()
+    assert not stale.exists()
     assert os.listdir(tmp_path / "cache") == [os.path.basename(jar)]
     with zipfile.ZipFile(jar) as z:
         names = set(z.namelist())

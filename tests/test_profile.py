@@ -147,7 +147,7 @@ def test_file_minmax_manifest_prunes_files(spark, tmp_path_factory):
              F.col("l_partkey").cast("int")],
         zpath, elem="int32", num_files=8)
     manifest = LP.file_minmax_manifest(spark, zpath, ["l_orderkey"])
-    assert manifest.count() == 8
+    assert manifest.num_rows == 8
     pruned, stats = LP.manifest_pruned_read(
         spark, zpath, manifest, {"l_orderkey": (1000, 2000)})
     want = li.filter("l_orderkey between 1000 and 2000")
@@ -162,6 +162,44 @@ def test_file_minmax_manifest_prunes_files(spark, tmp_path_factory):
         spark, zpath, manifest, {"l_orderkey": (10**9, 10**9 + 1)})
     assert none_stats["files_scanned"] == 0
     assert none_df.count() == 0
+
+
+def test_file_minmax_manifest_footer_routes_agree(spark, tmp_path_factory,
+                                                  monkeypatch, traced):
+    """The driver's footer reads (at most ``MANIFEST_DRIVER_FILES``
+    files, no Spark job) and the distributed footer job (above the
+    bound) build the same manifest Table — schema and rows — for an
+    int and two decimal stat columns."""
+    import math
+    import os
+
+    from lindel_spark import profile as LP
+    from lindel_spark import write as LW
+
+    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    li = spark.read.parquet(os.path.join(sf, "lineitem.parquet"))
+    price = F.col("l_extendedprice")
+    df = li.select(F.col("l_orderkey").cast("int").alias("k"),
+                   price.cast("decimal(12,2)").alias("price"),
+                   price.cast("decimal(30,2)").alias("wide"), "l_partkey")
+    zpath = str(tmp_path_factory.mktemp("routes") / "z")
+    LW.zorder_write(df, [F.col("k"), F.col("l_partkey").cast("int")],
+                    zpath, elem="int32", num_files=8)
+    cols = ["k", "price", "wide"]
+    driver, n_jobs, _ = traced(
+        lambda: LP.file_minmax_manifest(spark, zpath, cols))
+    assert n_jobs == 0 and driver.num_rows == 8
+    monkeypatch.setattr(LP, "MANIFEST_DRIVER_FILES", 0)
+    spread, n_jobs, _ = traced(
+        lambda: LP.file_minmax_manifest(spark, zpath, cols))
+    assert n_jobs >= 1
+    assert spread.schema == driver.schema
+    assert spread.sort_by("file").equals(driver.sort_by("file"))
+    # decimal stats (int-backed and fixed-width) scale exactly
+    lo = float(df.agg(F.min("price")).first()[0])
+    for c in ("min_price", "min_wide"):
+        assert min(driver.column(c).to_pylist()) == math.nextafter(
+            lo, -math.inf)
 
 
 def test_bloom_manifest_no_false_negatives_and_prunes(spark, tmp_path):
